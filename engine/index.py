@@ -9,35 +9,37 @@ against it and candidate values are scored and summed
 
 Here the index is a plain DataFrame/Parquet table
 
-    (column_name, key, candidate, score, rank)
+    (key long, candidate string, score double, rank int)
 
 built in ONE Spark job (the bash fan-out/merge choreography is just a shuffle)
-and consumed with a shuffle equi-join (measured faster than broadcasting the
-multi-million-row rank-1 side; the broadcast build is serial driver work that
-no executor count can hide). Keys are deterministic context signatures (the
-analog of CESID's tuple-similarity search: a value is recoverable because
-*related conversations share content*, like related tables in the reference's
-lake):
+and consumed with an equi-join on ``key``. Like the reference, the index has
+ONE key scheme, shared by the build and every probe: ``key`` is
+``xxhash64(family, components…)`` over a deterministic context signature
+(the analog of CESID's tuple-similarity search: a value is recoverable
+because *related conversations share content*, like related tables in the
+reference's lake):
 
 - role: (turn_idx mod 12, prev_role, next_role)   — role cycles are periodic
-- tool: md5(text)                                  — same turn in a related
+- tool: sig(text)                                  — same turn in a related
   conversation has the same text and the same tool
-- text: (turn_idx, md5(prev_text), md5(next_text)) — neighbors pin the slot
+- text: (turn_idx mod 12, sig(prev_text), sig(next_text)) — neighbors pin
+  the slot
 
 Scale design — raw text NEVER rides a wide shuffle here: the context window
-and the index aggregation carry 32-byte md5 sigs; text-family *candidates*
-ARE the sigs, and the winning text is fetched afterwards by an O(worklist)
-sig-keyed join against the table (engine.merge). This cuts the two widest
-shuffles of the maintenance pass by ~4× in bytes AND keeps the pair
-aggregation a pure-count HashAggregate (see _scored_pairs).
+and the index aggregation carry the text sig, a null-guarded
+``xxhash64(text)`` long (8 B per row); text-family *candidates* ARE the sigs
+(cast to string), and the winning text is fetched afterwards by an
+O(worklist) sig-keyed join against the table (engine.merge). The pair
+aggregation stays a pure-count HashAggregate over fixed-width keys (see
+_scored_pairs).
 
 Scoring = support count summed per (key, candidate) (reference A1,
 ``retrieve_relevant_values.py:88-102``). Top-1 (the merge path, k=1) is a
-second partial-aggregated ``min(struct(-score, candidate, ptr))`` — no window
-sort, scales at the hardware ceiling. Top-k (k>1, the offline-index API)
-falls back to ``row_number`` (reference W1 heap,
-``codes/utils/match_row.py:83-126`` — bound-pruning dropped: vectorized
-scoring beats branchy pruning).
+second partial-aggregated ``min(struct(-score, candidate))`` — no window
+sort, scales at the hardware ceiling. Top-k (k>1, the offline-index API
+written by ``python -m engine index``) uses ``row_number`` (reference W1
+heap, ``codes/utils/match_row.py:83-126`` — bound-pruning dropped:
+vectorized scoring beats branchy pruning).
 """
 
 from __future__ import annotations
@@ -48,34 +50,27 @@ from pyspark.sql import functions as F
 TOPK = 3  # reference keeps top-3 similar tuples (retrieve_relevant_values.py:202)
 
 
-def _with_context(df: DataFrame,
-                  extra: dict | None = None,
-                  sig_hash: bool = False) -> DataFrame:
+def text_sig():
+    """The text sig: a null-guarded ``xxhash64`` long. xxhash64 SKIPS null
+    args (it would alias null text onto the seed hash), hence the explicit
+    guard preserving "sig IS NULL ⇔ text IS NULL". Collision trade: two
+    distinct texts colliding in 64 bits could swap one imputed text value
+    (~1e-6 at 1e6 distinct; blast radius one heuristic cell)."""
+    return F.when(F.col("text").isNotNull(), F.xxhash64("text"))
+
+
+def _with_context(df: DataFrame, extra: dict | None = None) -> DataFrame:
     """Lean per-conversation context under stable (conv_id, turn_idx)
     ordering: the text sig is computed BEFORE the window (narrow), so the
     window shuffle — the single widest exchange of the merge pass — carries
-    a fixed-width sig per row instead of the raw text payload. ONE window
+    an 8-byte sig per row instead of the raw text payload. ONE window
     sort produces every context column (all functions share the frame →
     single Window exec). Window partitions are bounded by conversation
     length (≤ ~1e5 turns even for hot conversations); AQE splits oversized
     partitions.
 
-    Output columns: conv_id, turn_idx, role, tool, text_sig (null ⇔
+    Output columns: conv_id, turn_idx, role, tool, text_sig (long, null ⇔
     text null), prev_role, next_role, prev_text_sig, next_text_sig.
-
-    ``sig_hash=True`` (the merge-pass mode) represents the sig as a
-    null-guarded ``xxhash64(text)`` LONG instead of the md5 hex string:
-    the window exchange then carries 8 B per sig instead of ~32 B — the
-    guide-§2.3 "narrower types" cut on the pass's widest full-table
-    shuffle — and every downstream consumer (key hashing, index
-    candidates, the sig-keyed text fetch) stays fixed-width. xxhash64
-    SKIPS null args (it would alias null text onto the seed hash), hence
-    the explicit null guard preserving "sig IS NULL ⇔ text IS NULL".
-    Collision trade: two distinct texts colliding in 64 bits could swap
-    one imputed text value — same class and odds as the hashed index keys
-    (~1e-6 at 1e6 distinct; blast radius one heuristic cell). The public
-    offline-index API keeps md5 (hex, collision-free-in-practice,
-    DuckDB-replayable).
 
     Callers that consume the context more than once (index build + update
     plan) should persist the result: Catalyst does NOT share a common
@@ -85,10 +80,8 @@ def _with_context(df: DataFrame,
     ride the same pass — computed narrow, before the window — so a
     consumer needing them pays no extra table scan."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    sig = (F.when(F.col("text").isNotNull(), F.xxhash64("text"))
-           if sig_hash else F.md5("text"))
     cols = [F.col("conv_id"), F.col("turn_idx"), F.col("role"),
-            F.col("tool"), sig.alias("text_sig")]
+            F.col("tool"), text_sig().alias("text_sig")]
     for name, col in (extra or {}).items():
         cols.append(col.alias(name))
     sigs = df.select(*cols)
@@ -99,56 +92,26 @@ def _with_context(df: DataFrame,
             .withColumn("next_text_sig", F.lead("text_sig").over(w)))
 
 
-def role_key_col():
-    return F.concat_ws("§",
-                       F.pmod(F.col("turn_idx"), F.lit(12)),
-                       F.coalesce(F.col("prev_role"), F.lit("^")),
-                       F.coalesce(F.col("next_role"), F.lit("$")))
+def key_families():
+    """Per-family (key, candidate) columns over a ``_with_context`` frame.
+    The key is hashed DIRECTLY from the context components —
+    ``xxhash64(family, comp...)`` — with no composite key string: the
+    family literal disambiguates families, coalesce sentinels preserve the
+    null-neighbor classes, and components are fixed-width longs or a closed
+    role vocabulary (no concatenation aliasing).
 
-
-def tool_key_col():
-    return F.col("text_sig")
-
-
-def text_key_col():
-    return F.concat_ws("§",
-                       F.pmod(F.col("turn_idx"), F.lit(12)),
-                       F.coalesce(F.col("prev_text_sig"), F.lit("^")),
-                       F.coalesce(F.col("next_text_sig"), F.lit("$")))
-
-
-def text_prev_key_col():
-    """Single-neighbor fallback key: robust when the other neighbor's text
-    was itself injected (the reference's fuzzy column mapping plays the same
-    degrade-gracefully role, retrieve_relevant_tables.py:489-516)."""
-    return F.concat_ws("§", F.lit("p"),
-                       F.pmod(F.col("turn_idx"), F.lit(12)),
-                       F.coalesce(F.col("prev_text_sig"), F.lit("^")))
-
-
-def text_next_key_col():
-    return F.concat_ws("§", F.lit("n"),
-                       F.pmod(F.col("turn_idx"), F.lit(12)),
-                       F.coalesce(F.col("next_text_sig"), F.lit("$")))
-
-
-TEXT_FAMILIES = ("text", "text_prev", "text_next")
-
-
-def hashed_families():
-    """The merge-pass (``sig_hash`` context) analog of ``key_families``:
-    per-family (64-bit key, candidate) pairs where the key is hashed
-    DIRECTLY from the context components — ``xxhash64(family, comp...)``
-    — instead of building a ``concat_ws`` composite string per exploded
-    row and re-hashing it (guide §1.2 per-task work: drops one string
-    allocation + one variable-width hash per (row × family)). Key
-    identity matches the string scheme: the family literal disambiguates
-    families, coalesce sentinels preserve the null-neighbor classes, and
-    components are fixed-width longs or a closed role vocabulary (no
-    concatenation aliasing). Text-family candidates are the long sig cast
-    to string (uniform candidate type across the explode); the sig-keyed
-    text fetch casts identically. Only meaningful on a ``sig_hash=True``
-    context (long text sigs)."""
+    The 'role_text' family pins role by the row's own text — tuple
+    similarity on a second mapped column, like the reference probing every
+    related column (retrieve_relevant_tables.py:430-474). The single-
+    neighbor text families stay robust when the other neighbor's text was
+    itself injected (the reference's fuzzy column mapping plays the same
+    degrade-gracefully role, retrieve_relevant_tables.py:489-516). Text
+    candidates are the long sig cast to string (one candidate type across
+    the explode); the sig-keyed text fetch (engine.merge) casts
+    identically. The estimation defaults are two more families (global
+    per-slot mode — the reference's mean/mode initial guess,
+    row_acquisitor.py:545-548), so they ride the SAME explode/agg/top-k
+    instead of dedicated pipelines + broadcasts."""
     text_ok = F.col("text_sig").isNotNull()
     turn_mod = F.pmod(F.col("turn_idx"), F.lit(12))
     pr = F.coalesce(F.col("prev_role"), F.lit("^"))
@@ -175,44 +138,13 @@ def hashed_families():
     }
 
 
-def _sig_is_long(df: DataFrame) -> bool:
-    from pyspark.sql.types import LongType
-    return isinstance(df.schema["text_sig"].dataType, LongType)
-
-
-def key_families():
-    """The (family, key, candidate-with-guard) triples. The 'role_text'
-    family pins role by the row's own text — tuple similarity on a second
-    mapped column, like the reference probing every related column
-    (retrieve_relevant_tables.py:430-474). Text families' candidates are the
-    text's md5 sig — identity for support counting; the winner's payload is
-    fetched later by a sig-keyed join (engine.merge)."""
-    text_ok = F.col("text_sig").isNotNull()
-    turn_mod = F.pmod(F.col("turn_idx"), F.lit(12)).cast("string")
-    return {
-        "role": (role_key_col(), F.col("role")),
-        "role_text": (tool_key_col(), F.when(text_ok, F.col("role"))),
-        "tool": (tool_key_col(), F.when(text_ok, F.col("tool"))),
-        "text": (text_key_col(), F.col("text_sig")),
-        "text_prev": (text_prev_key_col(), F.col("text_sig")),
-        "text_next": (text_next_key_col(), F.col("text_sig")),
-        # estimation fallbacks as two more families (global per-slot mode —
-        # the reference's mean/mode initial guess, row_acquisitor.py:545-548)
-        # so they ride the SAME explode/agg/top-k instead of dedicated
-        # pipelines + broadcasts
-        "role_fb": (turn_mod, F.col("role")),
-        "tool_fb": (turn_mod, F.col("tool")),
-    }
-
-
-def _scored_pairs(ctx: DataFrame,
-                  probe_keys: DataFrame | None = None,
-                  hash_keys: bool = False) -> DataFrame:
-    """(column_name, key, candidate) support counts. All key families are
+def _scored_pairs(ctx: DataFrame) -> DataFrame:
+    """(key, candidate, score) support counts. All key families are
     emitted by a SINGLE explode over one context pass (a per-family union
     would re-run the window pipeline per branch — Catalyst has no
-    cross-branch subtree reuse); map-side partial aggregation collapses the
-    exploded pairs before the shuffle.
+    cross-branch subtree reuse); the exploded rows are already fixed-width
+    (long, short-string) pairs, and map-side partial aggregation collapses
+    them before the shuffle.
 
     Deliberately COUNT-ONLY: any string/struct-typed aggregate buffer (e.g.
     a min(donor-pointer)) is not HashAggregate-compatible, and the fallback
@@ -220,107 +152,49 @@ def _scored_pairs(ctx: DataFrame,
     this, the widest aggregation of the merge pass. Payload recovery happens
     downstream by sig-keyed fetch (engine.merge), never here.
 
-    ``hash_keys=True`` replaces the (family, composite-string-key) pair —
-    the key alone is up to ~70 bytes: turn-mod + two md5 hex sigs — with
-    ONE ``xxhash64(column_name, key)`` long: the widest aggregation and
-    the probe join then group/compare/shuffle an 8-byte column instead of
-    re-hashing two strings per row (measured −35% on the index build at
-    6M turns; folding the family name into the hash and dropping it from
-    the grouping bought another ~15%). The key string is still BUILT per
-    row (its null-sentinel structure defines key identity), only its
-    downstream representation changes; ``column_name`` disappears from
-    the hashed output (consumers keep their own). Collision trade: two
-    context keys colliding in 64 bits merge their candidate counts —
-    ~1e-6 at 1e6 distinct keys, and the blast radius is one
-    heuristically-imputed cell, never table integrity — the same class of
-    trade ``changes_between`` documents for its row-hash CDC diff."""
-    if hash_keys and _sig_is_long(ctx):
-        # sig_hash context: keys are component-hashed longs BEFORE the
-        # explode (hashed_families) — the exploded rows are already
-        # fixed-width (long, short-string) pairs, no post-explode
-        # projection or re-hash at all
-        fams = F.array(*[
-            F.struct(key.alias("key"), cand.alias("candidate"))
-            for key, cand in hashed_families().values()])
-        pairs = (ctx.select(F.explode(fams).alias("f"))
-                 .select("f.key", "f.candidate")
-                 .filter(F.col("candidate").isNotNull()
-                         & F.col("key").isNotNull()))
-        if probe_keys is not None:
-            probe_keys = probe_keys.select("key")
-        return (pairs.join(F.broadcast(probe_keys), ["key"], "left_semi")
-                if probe_keys is not None else pairs) \
-            .groupBy("key", "candidate") \
-            .agg(F.count(F.lit(1)).cast("double").alias("score"))
+    Collision trade: two context keys colliding in 64 bits merge their
+    candidate counts — ~1e-6 at 1e6 distinct keys, and the blast radius is
+    one heuristically-imputed cell, never table integrity — the same class
+    of trade ``changes_between`` documents for its row-hash CDC diff."""
     fams = F.array(*[
-        F.struct(F.lit(name).alias("column_name"),
-                 key.alias("key"), cand.alias("candidate"))
-        for name, (key, cand) in key_families().items()])
-    pairs = (ctx.select(F.explode(fams).alias("f"))
-             .select("f.column_name", "f.key", "f.candidate")
-             .filter(F.col("candidate").isNotNull()
-                     & F.col("key").isNotNull()))
-    if hash_keys:
-        # fold AFTER the null filter: xxhash64 skips null args, so hashing
-        # first would alias a null key onto the name-only hash
-        pairs = pairs.select(F.xxhash64("column_name", "key").alias("key"),
-                             "candidate")
-        if probe_keys is not None:
-            probe_keys = probe_keys.select(
-                F.xxhash64("column_name", "key").alias("key"))
-        group = ["key", "candidate"]
-    else:
-        group = ["column_name", "key", "candidate"]
-    if probe_keys is not None:
-        pairs = pairs.join(F.broadcast(probe_keys),
-                           ["key"] if hash_keys else ["column_name", "key"],
-                           "left_semi")
-    return (pairs.groupBy(*group)
+        F.struct(key.alias("key"), cand.alias("candidate"))
+        for key, cand in key_families().values()])
+    return (ctx.select(F.explode(fams).alias("f"))
+            .select("f.key", "f.candidate")
+            .filter(F.col("candidate").isNotNull() & F.col("key").isNotNull())
+            .groupBy("key", "candidate")
             .agg(F.count(F.lit(1)).cast("double").alias("score")))
 
 
 def build_candidate_index(df: DataFrame, k: int = TOPK,
-                          ctx: DataFrame | None = None,
-                          probe_keys: DataFrame | None = None,
-                          hash_keys: bool = False) -> DataFrame:
-    """One job: context windows → per-column (key, candidate) support counts →
-    per-key top-k.
+                          ctx: DataFrame | None = None) -> DataFrame:
+    """One job: context windows → (key, candidate) support counts → per-key
+    top-k. Output: ``(key long, candidate string, score double, rank
+    int)``; the family is folded into ``key``, so there is no
+    ``column_name`` (probes hash their own family literal identically).
 
     ``k=1`` (the merge-pass mode) selects the winner with a second partial
-    aggregation ``min(struct(-score, candidate, ptr))`` — deterministic
+    aggregation ``min(struct(-score, candidate))`` — deterministic
     (desc score, asc candidate) with NO window sort; it scales measurably
     better than the window at low parallelism (no sort, map-side combine on
-    both aggs). ``k>1`` keeps the ``row_number`` window (offline-index API).
-
-    ``probe_keys`` (columns: column_name, key) prunes the build to keys that
-    will actually be looked up (CESID's *online* search probes only the
-    missing cells' contexts, retrieve_relevant_values.py:133-231); omit it to
-    materialize the full offline index table.
-
-    ``hash_keys=True`` (the merge-pass mode — see ``_scored_pairs``) emits
-    ``key`` as ``xxhash64(column_name, key)`` instead of the (family,
-    composite string) pair — the output then has NO ``column_name``
-    column; consumers (``plan_impute_updates``) detect the long-typed key
-    and hash their probe side identically (they keep their own family
-    column for the pivot). The public offline-index default stays
-    string-keyed (human-debuggable, collision-free)."""
+    both aggs). ``k>1`` keeps the ``row_number`` window with the same
+    order, so its ``rank == 1`` rows are the ``k=1`` index."""
     if ctx is None:
         ctx = _with_context(df)
-    scored = _scored_pairs(ctx, probe_keys, hash_keys=hash_keys)
-    kcols = ["key"] if hash_keys else ["column_name", "key"]
+    scored = _scored_pairs(ctx)
     if k == 1:
         # SortAggregate here is fine: the input is the already-aggregated
         # pair set (orders of magnitude smaller than the explode)
         best = F.struct((-F.col("score")).alias("ns"),
                         F.col("candidate").alias("candidate"))
-        return (scored.groupBy(*kcols)
+        return (scored.groupBy("key")
                 .agg(F.min(best).alias("m"))
-                .select(*kcols,
+                .select("key",
                         F.col("m.candidate").alias("candidate"),
                         (-F.col("m.ns")).alias("score"),
                         F.lit(1).alias("rank")))
-    w = (Window.partitionBy(*kcols)
+    w = (Window.partitionBy("key")
          .orderBy(F.desc("score"), F.asc("candidate")))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select(*kcols, "candidate", "score", "rank"))
+            .select("key", "candidate", "score", "rank"))

@@ -71,7 +71,6 @@ def _plan_snapshot(table: Table, branch: str | None) -> Snapshot | None:
 def compact(spark: SparkSession, table: Table,
             target_bytes: int = DEFAULT_TARGET_BYTES,
             pass_id: str | None = None,
-            max_concurrency: int = 8,
             retries: int = 1,
             branch: str | None = None) -> Snapshot | None:
     """Rewrite every planned group into one file in ONE Spark job.
@@ -94,20 +93,14 @@ def compact(spark: SparkSession, table: Table,
     group, after the write is durably staged), so a pass killed after staging
     resumes by committing the recorded outputs without re-reading anything.
 
-    ``max_concurrency`` is DEPRECATED and ignored (a warning is emitted when a
-    caller passes a non-default value): the single-job design has no per-group
-    job fan-out left to bound — cap cluster load with Spark's own scheduler
-    pools / dynamic-allocation limits instead. Note the unified
-    ``spark.read.parquet`` over every group also assumes a UNIFORM schema
-    across all planned files (true for this engine's tables, which share one
-    manifest schema; the old per-group reads tolerated drift)."""
+    The single-job design has no per-group job fan-out to bound — cap
+    cluster load with Spark's own scheduler pools / dynamic-allocation
+    limits. Note the unified ``spark.read.parquet`` over every group also
+    assumes a UNIFORM schema across all planned files (true for this
+    engine's tables, which share one manifest schema; the old per-group
+    reads tolerated drift)."""
     from .merge import _adopt_crashed_commit
     from .write import partition_reps
-    if max_concurrency != 8:
-        import warnings
-        warnings.warn("compact(max_concurrency=...) is deprecated and ignored:"
-                      " the pass is one Spark job; bound cluster load via "
-                      "scheduler pools", DeprecationWarning, stacklevel=2)
     pass_id = pass_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointLog(table.root, pass_id, "compact")
     if ckpt.pass_committed():

@@ -12,8 +12,9 @@ coalesce(index value, estimation value) — the "search vs estimate" classifier
 exactly the higher-confidence-source rule it learns (technique_report Table 8).
 
 Scale shape: every wide stage (context window, index aggregation, probe join)
-carries md5 sigs, never raw text; the winning text payloads are fetched at the
-end with ONE broadcast-keyed join against the table, O(worklist) rows.
+carries the xxhash64 long text sig, never raw text; the winning text payloads
+are fetched at the end with ONE broadcast-keyed join against the table,
+O(worklist) rows.
 
 The MERGE itself is copy-on-write under snapshot isolation: only data files
 whose stats intersect the source's key domain are rewritten; everything else
@@ -28,10 +29,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .checkpoint import CheckpointLog, TaskRecord
 from .format import DataFile, Snapshot, Table, collect_parquet_stats
-from .index import _with_context, build_candidate_index, key_families
+from .index import _with_context, build_candidate_index, key_families, text_sig
 from .scan import (MERGE_KEYS, Predicate, conv_overlap, prune_files,  # noqa: F401
                    scan)
 from .write import range_bounds_from_entries, stage_dataframe
@@ -85,21 +87,16 @@ def worklist(ctx: DataFrame) -> DataFrame:
     """Rows with a missing role/tool/text cell — the analog of the
     reference's ``missing_tab_row_col.csv`` worklist. ``ctx`` is the lean
     context frame (``engine.index._with_context``); text nullness survives
-    as ``text_sig IS NULL`` (md5 of null is null)."""
+    as ``text_sig IS NULL`` (the sig is null-guarded)."""
     return ctx.filter(F.col("role").isNull() | F.col("text_sig").isNull()
                       | (F.col("tool").isNull() & (F.col("role") == "tool")))
 
 
 def melt_cells(work: DataFrame) -> DataFrame:
     """Worklist at cell grain: (conv_id, turn_idx, column_name, key) — one
-    row per (missing cell, key family) probe. On a ``sig_hash`` context
-    (long text sigs — the merge-pass mode) the keys are the component-
-    hashed longs of ``hashed_families``, matching the index build
-    expression-for-expression; otherwise the composite strings of
-    ``key_families``."""
-    from .index import _sig_is_long, hashed_families
-    fams = hashed_families() if _sig_is_long(work) else key_families()
-    keyed = {name: key for name, (key, _) in fams.items()}
+    row per (missing cell, key family) probe, keyed by the same
+    ``key_families`` expressions the index build hashes."""
+    keyed = {name: key for name, (key, _) in key_families().items()}
     melt = F.explode(F.map_from_arrays(
         F.array(*[F.lit(k) for k in keyed]),
         F.array(*keyed.values())))
@@ -107,7 +104,6 @@ def melt_cells(work: DataFrame) -> DataFrame:
 
 
 def plan_impute_updates(df: DataFrame, cand_idx: DataFrame,
-                        fallbacks: DataFrame | None = None,
                         ctx: DataFrame | None = None,
                         work: DataFrame | None = None,
                         work_rows: int | None = None,
@@ -121,47 +117,36 @@ def plan_impute_updates(df: DataFrame, cand_idx: DataFrame,
     The probe is a shuffle equi-join of the melted cell set against the
     rank-1 index (broadcasting the multi-million-row index was the worst-
     scaling stage of the pass: the broadcast build is serial driver work).
-    Text values — the index winner (by md5 sig) and the nearest-turn
-    estimation fallback (by ±1 key) — are fetched with two broadcast-keyed
-    joins against column-pruned table scans, O(worklist) rows each, so no
-    wide stage ever carries text payloads."""
+    ``cand_idx`` is a ``build_candidate_index`` table (key long, candidate,
+    score, rank); any other key type raises ``ValueError`` instead of
+    silently matching nothing. Text values — the index winner (by its sig)
+    and the nearest-turn estimation fallback (by ±1 key) — are fetched with
+    two broadcast-keyed joins against column-pruned table scans, O(worklist)
+    rows each, so no wide stage ever carries text payloads."""
+    key_type = {f.name: f.dataType for f in cand_idx.schema.fields}.get("key")
+    if not isinstance(key_type, LongType):
+        got = key_type.simpleString() if key_type is not None else "missing"
+        raise ValueError(
+            "cand_idx must be a build_candidate_index table (key bigint, "
+            "candidate string, score double, rank int); got key " + got)
     if ctx is None:
         ctx = _with_context(df)
 
-    _ = fallbacks  # retained for API compat; fallbacks are index families now
     if work is None:
         # the worklist (~1% of rows) feeds two join branches below (melted
         # cells and the wide row) — persist it so the conv-window pipeline
         # over the full table runs ONCE, not once per branch
         work = worklist(ctx).persist()
 
-    # ONE join for all key families: the worklist at cell grain
-    # (column_name, key) joins the index once and pivots back. Per-family
-    # joins would schedule one build-side job each — pure serial stage
-    # latency at any scale (the reference pays the same shape of cost
-    # probing its per-dtype indexes one by one, construct_index.py:284-313).
+    # ONE join for all key families: the worklist at cell grain joins the
+    # index once on the long key (the family is folded into it) and pivots
+    # back on the cells' own column_name. Per-family joins would schedule
+    # one build-side job each — pure serial stage latency at any scale (the
+    # reference pays the same shape of cost probing its per-dtype indexes
+    # one by one, construct_index.py:284-313).
     keyed = list(key_families())
     cells = melt_cells(work)
-    # a long-typed index key means the index was built with hash_keys=True
-    # (engine.index): its key is xxhash64(column_name, key) and it carries
-    # no column_name column — fold the probe side identically (cells keep
-    # their own column_name for the pivot) and join on the single long
-    from pyspark.sql.types import LongType
-    hashed = isinstance(cand_idx.schema["key"].dataType, LongType)
-    if hashed:
-        if not isinstance(cells.schema["key"].dataType, LongType):
-            # string-keyed cells against a hashed index (md5-sig context):
-            # fold the probe side the same way the index build did
-            cells = cells.select(
-                "conv_id", "turn_idx", "column_name",
-                F.xxhash64("column_name", "key").alias("key"))
-        rank1 = (cand_idx.filter(F.col("rank") == 1)
-                 .select("key", "candidate"))
-        join_cols = ["key"]
-    else:
-        rank1 = (cand_idx.filter(F.col("rank") == 1)
-                 .select("column_name", "key", "candidate"))
-        join_cols = ["column_name", "key"]
+    rank1 = cand_idx.filter(F.col("rank") == 1).select("key", "candidate")
     # probe-join side choice: when the caller knows the worklist is small
     # (``work_rows`` — impute_merge already materialized the count), force
     # the CELLS side to broadcast so the multi-million-row rank-1 index
@@ -171,14 +156,10 @@ def plan_impute_updates(df: DataFrame, cand_idx: DataFrame,
     # r7 narrow-key index (fixed-width rows shrank the shuffle
     # alternative): broadcast still wins the stage it affects by
     # ~1-1.8 s per pass at 8 cores (src_materialize marks, 5 interleaved
-    # pairs). ENGINE_PROBE_BROADCAST=0 opts into the shuffle join for
-    # cluster profiles where the driver-serial broadcast build is the
-    # scarcer resource.
-    if (work_rows is not None
-            and work_rows * len(keyed) <= BROADCAST_MAX_ROWS
-            and os.environ.get("ENGINE_PROBE_BROADCAST", "1") == "1"):
+    # pairs).
+    if work_rows is not None and work_rows * len(keyed) <= BROADCAST_MAX_ROWS:
         cells = F.broadcast(cells)
-    hits = (cells.join(rank1, join_cols, "inner")
+    hits = (cells.join(rank1, ["key"], "inner")
             .groupBy("conv_id", "turn_idx")
             .pivot("column_name", keyed)
             .agg(F.first("candidate")))
@@ -210,18 +191,13 @@ def plan_impute_updates(df: DataFrame, cand_idx: DataFrame,
         _cache_out.append(work)
 
     text_missing = F.col("text_sig").isNull()
-    # Text payload fetch #1 — the index winner, keyed by its md5 sig: the
+    # Text payload fetch #1 — the index winner, keyed by its sig: the
     # winning sig's text is read back from a column-pruned scan of the table
     # restricted (broadcast semi-join) to the ≤|worklist| winning sigs.
     need_sigs = (work.filter(text_missing & F.col("cand_text_sig").isNotNull())
                  .select(F.col("cand_text_sig").alias("sig")).distinct())
-    from .index import _sig_is_long
-    # the fetch key must mirror the context's sig representation: long
-    # xxhash64 sigs arrive as their string cast (the index candidate type)
-    sig_expr = (F.when(F.col("text").isNotNull(),
-                       F.xxhash64("text")).cast("string")
-                if _sig_is_long(ctx) else F.md5("text"))
-    sig_map = (df.select(sig_expr.alias("sig"), "text")
+    # the fetch key is the sig's string cast (the index candidate type)
+    sig_map = (df.select(text_sig().cast("string").alias("sig"), "text")
                .join(F.broadcast(need_sigs), "sig", "left_semi")
                .groupBy("sig").agg(F.min("text").alias("cand_text_val"))
                .withColumnRenamed("sig", "cand_text_sig"))
@@ -896,44 +872,15 @@ def impute_merge(spark: SparkSession, table: Table,
     # ONE materialization of the lean conv-window pipeline, shared by the
     # index build and the update plan (Catalyst has no cross-branch subtree
     # reuse; without this the windows run 2-6×). MEMORY_AND_DISK: at real
-    # scale the context spills instead of recomputing — both are fine, the
-    # knob exists for the cluster profile.
+    # scale the context spills instead of recomputing.
     from pyspark import StorageLevel
-    import os as _os
-    # merge-pass context carries LONG xxhash64 text sigs (ENGINE_SIG_HASH,
-    # default on — see _with_context: −24 B/row on the window exchange and
-    # fixed-width keys/candidates everywhere downstream); requires the
-    # hashed-key index, since the string-keyed struct explode mixes types
-    # on a long-sig context
-    use_hash_keys = _os.environ.get("ENGINE_HASH_KEYS", "1") == "1"
-    sig_hash = (use_hash_keys and cand_idx is None
-                and _os.environ.get("ENGINE_SIG_HASH", "1") == "1")
-    if _os.environ.get("ENGINE_CTX_CACHE", "1") == "1":
-        ctx = _with_context(df, extra=extra_ctx_cols,
-                            sig_hash=sig_hash).persist(
-            StorageLevel.MEMORY_AND_DISK)
-    else:
-        ctx = _with_context(df, extra=extra_ctx_cols, sig_hash=sig_hash)
+    ctx = _with_context(df, extra=extra_ctx_cols).persist(
+        StorageLevel.MEMORY_AND_DISK)
     work = worklist(ctx).persist()
     if cand_idx is None:
         # merge-pass index: rank-1 only (k=1 — double partial agg, no window
-        # sort) with HASHED keys (engine.index hash_keys: the widest agg and
-        # the probe join carry an 8-byte long instead of a ~70-byte composite
-        # string — measured −35% on the index build at 6M turns, r7).
-        # probe_keys pruning: text-family (key, candidate) pairs are
-        # near-unique per row, so the pair agg barely collapses them — the
-        # index shuffle carries O(table) rows of which only O(worklist) are
-        # ever probed. With fixed-width hashed keys that exchange is already
-        # ~3× smaller, and the per-row broadcast probe of the full exploded
-        # pair set measures a net LOSS here (r7: prune +1.8 s on a 6M-turn
-        # pass vs −0 saved) — default OFF now; flip ENGINE_PROBE_PRUNE=1 on
-        # a network-shuffle cluster where the smaller index exchange can
-        # still win.
-        pk = None
-        if os.environ.get("ENGINE_PROBE_PRUNE", "0") == "1":
-            pk = melt_cells(work).select("column_name", "key").distinct()
-        cand_idx = build_candidate_index(
-            df, k=1, ctx=ctx, probe_keys=pk, hash_keys=use_hash_keys)
+        # sort); the widest agg and the probe join carry an 8-byte long key
+        cand_idx = build_candidate_index(df, k=1, ctx=ctx)
     # cand_idx is deliberately NOT persisted: it has exactly one consumer
     # (the rank-1 probe join inside the persisted probed-worklist frame),
     # and the in-memory columnar cache build for a multi-million-row

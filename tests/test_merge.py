@@ -1,6 +1,7 @@
 """MERGE-impute invariants (the BASELINE.json correctness gate):
 non-injected cells untouched, deterministic imputation, checkpoint resume."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from engine.format import Table
@@ -272,45 +273,52 @@ def test_sparse_prune_empty_frame_keeps_columns(spark):
     assert out.count() == 0
 
 
-def test_impute_sig_hash_mode_matches_md5_mode(spark, tmp_path, monkeypatch):
-    """The long-xxhash64 sig representation (ENGINE_SIG_HASH, r7 merge-pass
-    default) must impute the same cells as the md5-string representation:
-    identical role/tool values everywhere (their candidates are the raw
-    strings in both modes) and text non-null with the same provenance
-    counts. Text VALUES may differ only where the rank-1 winner is a tie
-    broken by candidate ordering (hex vs decimal sort), so they are
-    compared through evaluate_impute accuracy instead of byte equality."""
-    df = generate_transcripts(spark, num_convs=60)
-    injected, wl = inject_missing(df)
-    outs = {}
-    for mode in ("1", "0"):
-        monkeypatch.setenv("ENGINE_SIG_HASH", mode)
-        root = str(tmp_path / f"tbl_{mode}")
-        t = Table.create(root)
-        append(t, injected, num_files=4,
-               range_cols=["conv_id", "turn_idx"],
-               sort_cols=["conv_id", "turn_idx"])
-        impute_merge(spark, t, pass_id="p1")
-        outs[mode] = scan(spark, t)
-    for mode, out in outs.items():
-        assert out.filter("role is null or text is null").count() == 0, mode
-    a = sorted_rows(outs["1"].select("conv_id", "turn_idx", "role", "tool"))
-    b = sorted_rows(outs["0"].select("conv_id", "turn_idx", "role", "tool"))
-    assert a == b
-    acc1 = evaluate_impute(outs["1"], wl)
-    acc0 = evaluate_impute(outs["0"], wl)
-    assert abs(acc1["text"]["acc"] - acc0["text"]["acc"]) < 0.02
+def test_plan_impute_updates_rejects_string_keyed_index(spark):
+    """An index whose key is not a long (e.g. a string-keyed Parquet index
+    written by an older ``python -m engine index``) must raise, not turn
+    every cell into an 'estimate'."""
+    from engine.merge import plan_impute_updates
+    df, _ = inject_missing(generate_transcripts(spark, num_convs=5))
+    stale = spark.createDataFrame(
+        [("text", "3§^§$", "hello", 2.0, 1)],
+        "column_name string, key string, candidate string, score double, "
+        "rank int")
+    with pytest.raises(ValueError, match="key bigint"):
+        plan_impute_updates(df, stale)
+
+
+def test_topk_index_rank1_matches_k1_index(spark, tmp_path):
+    """The offline top-k index (``row_number`` path, as ``python -m engine
+    index`` writes it) round-trips through Parquet, its rank-1 rows are the
+    k=1 index, and either index plans the same updates."""
+    from engine.index import build_candidate_index
+    from engine.merge import plan_impute_updates
+    df = generate_transcripts(spark, num_convs=30)
+    injected, _ = inject_missing(df)
+    out = str(tmp_path / "index")
+    build_candidate_index(injected).write.parquet(out)
+    topk = spark.read.parquet(out)
+    k1 = build_candidate_index(injected, k=1)
+    assert topk.filter("rank > 3").count() == 0
+    assert topk.filter("rank > 1").count() > 0
+    cols = ("key", "candidate", "score", "rank")
+    assert (sorted_rows(topk.filter("rank = 1").select(*cols), cols)
+            == sorted_rows(k1.select(*cols), cols))
+    assert (sorted_rows(plan_impute_updates(injected, topk))
+            == sorted_rows(plan_impute_updates(injected, k1)))
 
 
 def test_scored_pairs_sig_hash_is_hash_aggregate_no_concat(spark):
-    """The component-hashed explode (hashed_families on a sig_hash context)
-    must stay a partial+final HashAggregate and must NOT build composite
-    key strings (no concat_ws in the plan) — the r7 narrow-key invariant."""
+    """The component-hashed explode (long text sig, keys hashed straight
+    from the context components) must stay a partial+final HashAggregate
+    over a long key and must NOT build composite key strings (no concat_ws
+    in the plan) — the narrow-key invariant."""
     from engine.index import _scored_pairs, _with_context
     from tests.test_plans import plan_of
-    p = plan_of(_scored_pairs(
-        _with_context(generate_transcripts(spark, num_convs=5),
-                      sig_hash=True), hash_keys=True))
+    pairs = _scored_pairs(
+        _with_context(generate_transcripts(spark, num_convs=5)))
+    assert dict(pairs.dtypes)["key"] == "bigint"
+    p = plan_of(pairs)
     assert "HashAggregate" in p
     assert "SortAggregate" not in p
     assert "concat_ws" not in p

@@ -59,8 +59,10 @@ def main() -> None:
     upd = plan_impute_updates(table_df, build_candidate_index(table_df, k=1))
     sections.append((
         "Impute-MERGE update plan",
-        "One window pass over md5 sigs (all lag/lead share a frame; raw text "
-        "never enters the shuffle), one explode for all key families, a "
+        "One window pass over the null-guarded xxhash64(text) long sig (all "
+        "lag/lead share a frame; raw text never enters the shuffle), one "
+        "explode for all key families, each keyed by one "
+        "xxhash64(family, components...) long (no concat_ws), a "
         "count-only HashAggregate with map-side partials (any string/struct "
         "agg buffer would demote it to a SortAggregate over the exploded "
         "pairs), rank-1 by a second partial agg (no window sort), a shuffle "
