@@ -1,20 +1,26 @@
-"""Per-task checkpoint manifests: lineage (input files → output files) + metrics.
+"""Per-task checkpoint manifests and the one commit protocol every
+checkpointed rewrite runs through (``run_rewrite``).
 
 The reference persists inter-stage state as monolithic pickles
 (``codes/utils/generalFunctions.py:109-130``; e.g.
 ``codes/search/construct_index.py:540-543`` writes one pickle per process
-group) — resumable only at whole-stage granularity.  Here every maintenance
-pass is split into tasks (file groups / partitions); each task appends one
-JSON record after its outputs are durably staged, so a killed pass resumes by
-skipping completed tasks and reusing their staged outputs (FIXTURES.md §4).
+group) — resumable only at whole-stage granularity.  Here every rewrite
+appends one JSON record per task (file group / rewrite) after its outputs
+are durably staged. The records ARE the commit request — staged files,
+removed paths, the expected delete set — so a killed pass resumes by
+committing exactly what was recorded, without re-staging (FIXTURES.md §4).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
+
+from .format import CommitConflictError, DataFile, Snapshot, Table
+from .write import restat_staged
 
 
 @dataclass
@@ -147,3 +153,163 @@ def record_committed_tombstone(ckpt_dir: str, pass_key: str) -> None:
         f.write(pass_key + "\n")
         f.flush()
         os.fsync(f.fileno())
+
+
+# ------------------------------------------------------------ commit protocol
+def plan_snapshot(table: Table, branch: str | None) -> Snapshot | None:
+    """The snapshot a write plans against: a named branch's head
+    (branch-aware maintenance, streaming write-audit-publish) or main. A
+    null-rooted branch (no commits yet) plans as EMPTY — the caller no-ops,
+    exactly like a pass on an empty main table. ``ref_snapshot``'s default
+    would raise; passing the None through ``manifest_entries`` would
+    silently plan MAIN's files onto the branch."""
+    if branch is None:
+        return table.current_snapshot()
+    return table.ref_snapshot(branch, allow_empty=True)
+
+
+@dataclass
+class StagedTask:
+    """One task a rewrite staged: lineage (``input_files`` → ``files``) plus,
+    in ``extra``, the commit fields its record carries: ``removed`` (paths
+    the commit drops; defaults to ``input_files``), ``deletes`` (the
+    equality-delete set the plan read — the commit conflicts on any other
+    live delete file), ``mor`` and ``affected`` (merge-on-read: the commit
+    conflicts if an ``affected`` file was replaced), and the op fields its
+    summary reads."""
+    task_id: str
+    input_files: list[str]
+    files: list[DataFile]
+    skew_factor: float = 1.0
+    extra: dict = field(default_factory=dict)
+
+
+@dataclass
+class CommitRequest:
+    """A pass's recorded tasks folded into the arguments of its commit."""
+    files: list[DataFile]
+    removed: set[str]
+    deletes: set[str] | None
+    extra: dict
+
+
+def file_skew(files: list[DataFile]) -> float:
+    """Largest staged file's rows over the mean (a task's skew_factor)."""
+    mean = sum(e.record_count for e in files) / max(1, len(files))
+    return round(max((e.record_count for e in files), default=0)
+                 / max(1.0, mean), 3)
+
+
+def _commit_request(records: list[dict],
+                    files: list[DataFile]) -> CommitRequest:
+    removed: set[str] = set()
+    deletes: set[str] | None = None
+    extra: dict = {}
+    for r in records:
+        ext = r.get("extra") or {}
+        # records without a "removed" list predate it: they were all
+        # copy-on-write rewrites that remove exactly their inputs
+        removed |= set(ext.get("removed", r["input_files"]))
+        if "deletes" in ext:
+            deletes = (deletes or set()) | set(ext["deletes"])
+        extra.update(ext)
+    return CommitRequest(files, removed, deletes, extra)
+
+
+def _adopt_crashed_commit(table: Table,
+                          ckpt: CheckpointLog) -> Snapshot | None:
+    """If a previous run committed this pass's snapshot but died before
+    writing the finalize record, adopt that snapshot instead of
+    re-committing (a re-commit would add the staged files under a SECOND
+    manifest while removing the already-removed inputs — duplicate rows on
+    scan). Reachable in routine streaming restarts (ingest_batch replays a
+    batch through merge_into with the same pass_id). Only a snapshot of
+    this pass's own operation qualifies: pass ids are caller-chosen, and
+    another operation's commit under the same id is not this pass."""
+    for s in reversed(table.snapshots()):
+        if (s.operation == ckpt.op
+                and s.summary.get("pass_id") == ckpt.pass_id):
+            ckpt.finalize({"snapshot_id": s.snapshot_id, "adopted": True})
+            return s
+    return None
+
+
+def run_rewrite(table: Table, op: str, pass_id: str | None,
+                branch: str | None,
+                stage: Callable[[Snapshot | None], list[StagedTask] | None],
+                summary: Callable[[CommitRequest], dict] | None = None,
+                check: Callable[[CommitRequest, Callable], None] | None = None,
+                commit_empty: bool = True) -> Snapshot | None:
+    """Run one checkpointed rewrite: ``op`` names both its checkpoint log
+    and the snapshot it commits onto ``branch`` (main when None).
+
+    1. A finalized pass returns the head; a pass whose snapshot committed
+       but whose finalize record was lost adopts that snapshot.
+    2. With no task recorded yet, ``stage(plan snapshot)`` plans and stages
+       the rewrite and returns its tasks (None: nothing to rewrite —
+       nothing is recorded and the result is None). Each task is recorded.
+    3. The recorded tasks are the commit request, so a fresh pass and a
+       resumed one commit the same files, removals and validations.
+       ``check(request, abandon)`` may veto the commit by raising;
+       ``summary(request)`` adds op fields to the snapshot summary. A
+       request that adds and removes nothing still commits (an empty
+       snapshot) unless ``commit_empty`` is False: then the pass finalizes
+       as a no-op and returns None.
+    4. A commit conflict abandons the attempt (its staged files become
+       sweepable; a replay replans) and re-raises. Success finalizes."""
+    ckpt = CheckpointLog(table.root, pass_id or uuid.uuid4().hex[:12], op)
+    if ckpt.pass_committed():
+        return plan_snapshot(table, branch)
+    adopted = _adopt_crashed_commit(table, ckpt)
+    if adopted is not None:
+        return adopted
+    files = None
+    if all(r["task_id"].startswith("__") for r in ckpt.completed()):
+        snap = plan_snapshot(table, branch)
+        if branch is not None and snap is None:
+            return None  # null-rooted branch: nothing to rewrite yet
+        tasks = stage(snap)
+        if tasks is None:
+            return None
+        for t in tasks:
+            ckpt.record(TaskRecord(
+                ckpt.pass_id, op, t.task_id, t.input_files,
+                [e.path for e in t.files],
+                rows=sum(e.record_count for e in t.files),
+                bytes=sum(e.file_size_bytes for e in t.files),
+                skew_factor=t.skew_factor, extra=t.extra))
+        files = [e for t in tasks for e in t.files]
+    records = ckpt.completed()
+    if files is None:
+        files = [restat_staged(table, p)
+                 for r in records for p in r["output_files"]]
+    req = _commit_request(records, files)
+    if check is not None:
+        check(req, ckpt.abandon)
+    if not (commit_empty or req.files or req.removed):
+        ckpt.finalize({"noop": True})
+        return None
+    mor = bool(req.extra.get("mor"))
+    try:
+        snap = table.commit(
+            op, added=req.files, removed_paths=req.removed,
+            summary={"pass_id": ckpt.pass_id,
+                     **(summary(req) if summary else {}),
+                     **({"mor": True} if mor else {})},
+            expected_delete_paths=req.deletes,
+            # serializable merge-on-read: a concurrent delete file over our
+            # staged delete keys' range conflicts (needs a recorded
+            # delete set — snapshot isolation records none)
+            conflict_key_ranges=([e for e in req.files
+                                  if e.content == "deletes"]
+                                 if mor else None),
+            conflict_if_removed=(set(req.extra["affected"])
+                                 if "affected" in req.extra else None),
+            branch=branch)
+    except CommitConflictError:
+        # a concurrent pass replaced our inputs (or shadowed rows we
+        # copied): committing would resurrect or revert rows
+        ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
+        raise
+    ckpt.finalize({"snapshot_id": snap.snapshot_id})
+    return snap

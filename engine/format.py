@@ -912,7 +912,6 @@ class Table:
     def commit(self, operation: str, added: list[DataFile],
                removed_paths: set[str] | None = None,
                summary: dict | None = None,
-               carry_manifests: bool = True,
                expected_delete_paths: set[str] | None = None,
                conflict_key_ranges: list[DataFile] | None = None,
                branch: str | None = None,
@@ -953,8 +952,7 @@ class Table:
         lock = self._acquire_commit_lock()
         try:
             return self._commit_locked(operation, added, removed_paths,
-                                       summary, carry_manifests,
-                                       expected_delete_paths,
+                                       summary, expected_delete_paths,
                                        conflict_key_ranges, branch,
                                        conflict_if_removed)
         finally:
@@ -966,7 +964,6 @@ class Table:
     def _commit_locked(self, operation: str, added: list[DataFile],
                        removed_paths: set[str] | None,
                        summary: dict | None,
-                       carry_manifests: bool,
                        expected_delete_paths: set[str] | None = None,
                        conflict_key_ranges: list[DataFile] | None = None,
                        branch: str | None = None,
@@ -1063,7 +1060,7 @@ class Table:
                         "replay")
             for mf, ents in loaded:
                 paths = {e["path"] for e in ents}
-                if carry_manifests and not (paths & removed_paths):
+                if not (paths & removed_paths):
                     manifests.append(mf)     # untouched: carry over
                 else:
                     kept = [DataFile.from_json(e) for e in ents

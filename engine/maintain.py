@@ -16,11 +16,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointLog, TaskRecord
-from .format import (DataFile, Snapshot, Table, _schema_state_of,
-                     collect_parquet_stats, ts_bounds_micros)
+from .checkpoint import StagedTask, file_skew, run_rewrite
+from .format import (CommitConflictError, DataFile, Snapshot, Table,
+                     _schema_state_of, ts_bounds_micros)
 from .layout import cluster_dataframe
-from .write import stage_dataframe
+from .write import output_file_count, stage_dataframe
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # real-cluster default; tests pass small
 
@@ -52,22 +52,6 @@ def plan_compaction(entries: list[DataFile],
     return [g for g in groups if len(g) >= min_group]
 
 
-def _plan_snapshot(table: Table, branch: str | None) -> Snapshot | None:
-    """The snapshot a maintenance pass plans against: a named branch's head
-    (branch-aware maintenance — VERDICT r5 task #2) or main. A long-lived
-    write-audit-publish branch fed by ``ingest_batch(branch=)`` accumulates
-    micro-batch small files and MoR deletes exactly like main does; without
-    branch= the cadence could not retire them until publish — and
-    ``fast_forward`` would then publish the fragmentation to main."""
-    if branch is None:
-        return table.current_snapshot()
-    # a null-rooted branch (no commits yet) plans as EMPTY — the caller
-    # no-ops, exactly like every pass does on an empty main table. The
-    # allow_empty=False default would raise; passing the None through
-    # manifest_entries would silently plan MAIN's files onto the branch.
-    return table.ref_snapshot(branch, allow_empty=True)
-
-
 def compact(spark: SparkSession, table: Table,
             target_bytes: int = DEFAULT_TARGET_BYTES,
             pass_id: str | None = None,
@@ -91,7 +75,9 @@ def compact(spark: SparkSession, table: Table,
 
     Per-group lineage+metrics checkpoint records are still written (one per
     group, after the write is durably staged), so a pass killed after staging
-    resumes by committing the recorded outputs without re-reading anything.
+    resumes by committing the recorded outputs without re-reading anything
+    (killed mid-way through the records, it commits the groups recorded so
+    far: a smaller compaction, equally valid).
 
     The single-job design has no per-group job fan-out to bound — cap
     cluster load with Spark's own scheduler pools / dynamic-allocation
@@ -99,58 +85,29 @@ def compact(spark: SparkSession, table: Table,
     assumes a UNIFORM schema across all planned files (true for this
     engine's tables, which share one manifest schema; the old per-group
     reads tolerated drift)."""
-    from .merge import _adopt_crashed_commit
     from .write import partition_reps
     pass_id = pass_id or uuid.uuid4().hex[:12]
-    ckpt = CheckpointLog(table.root, pass_id, "compact")
-    if ckpt.pass_committed():
-        return _plan_snapshot(table, branch)
-    adopted = _adopt_crashed_commit(table, ckpt, pass_id)
-    if adopted is not None:
-        return adopted
-    plan_snap = _plan_snapshot(table, branch)
-    if branch is not None and plan_snap is None:
-        return None  # null-rooted branch: nothing to compact yet
-    entries = table.manifest_entries(plan_snap)
-    groups = plan_compaction(entries, target_bytes)
-    if not groups:
-        return None
-    # pin the equality-delete set this plan reads: a delete committed after
-    # this point shadows rows the rewrite may copy under a fresh sequence
-    # number — the commit below validates against exactly this set, and a
-    # resumed pass replays the RECORDED set (not the live one)
-    dels = table.manifest_entries(plan_snap, content="deletes")
-    plan_rec = ckpt.get("__plan__")
-    if plan_rec is None:
-        ckpt.record(TaskRecord(
-            pass_id, "compact", "__plan__", [], [],
-            extra={"deletes": sorted(d.path for d in dels)}))
-        expected_dels = {d.path for d in dels}
-    else:
-        expected_dels = set((plan_rec.get("extra") or {})
-                            .get("deletes", []))
-    total_rows = sum(e.record_count for g in groups for e in g)
-    mean_rows = total_rows / max(1, len(groups))
+    replan = False
 
-    results: list[tuple[str, list[str], list[DataFile]]] = []
-    todo: list[tuple[int, list[DataFile]]] = []
-    for i, group in enumerate(groups):
-        task_id = f"group-{i:05d}"
-        rec = ckpt.get(task_id)
-        if rec is not None:
-            results.append((task_id, rec["input_files"],
-                            [_restat(table, p) for p in rec["output_files"]]))
-        else:
-            todo.append((i, group))
-
-    if todo:
-        n = len(todo)
+    def stage(snap: Snapshot | None) -> list[StagedTask] | None:
+        nonlocal replan
+        groups = plan_compaction(table.manifest_entries(snap), target_bytes)
+        if not groups:
+            return None
+        # pin the equality-delete set this plan reads: a delete committed
+        # after this point shadows rows the rewrite may copy under a fresh
+        # sequence number — the commit validates against exactly this set
+        dels = table.manifest_entries(snap, content="deletes")
+        mean_rows = (sum(e.record_count for g in groups for e in g)
+                     / max(1, len(groups)))
+        n = len(groups)
         reps = partition_reps(n)
         route = [(os.path.basename(e.path), reps[j])
-                 for j, (_, group) in enumerate(todo) for e in group]
+                 for j, group in enumerate(groups) for e in group]
         mapping = F.broadcast(
             spark.createDataFrame(route, "__cmp_base string, __cmp_rep long"))
-        paths = [os.path.join(table.root, e.path) for _, g in todo for e in g]
+        planned = [e for g in groups for e in g]
+        paths = [os.path.join(table.root, e.path) for e in planned]
         from .scan import _table_reader, reconcile_schema
         # schema-merging reader: a bin-pack group can mix pre- and
         # post-add_column files — a plain read would take one footer's
@@ -170,8 +127,7 @@ def compact(spark: SparkSession, table: Table,
             # The delete FILES stay committed: they may still apply to data
             # files outside this plan; rewrite_deletes() retires them.
             from .scan import apply_equality_deletes
-            todo_entries = [e for _, g in todo for e in g]
-            df = apply_equality_deletes(spark, table, df, todo_entries,
+            df = apply_equality_deletes(spark, table, df, planned,
                                         dels, base_col="__cmp_base")
         df = (df.join(mapping, "__cmp_base")
               .repartition(n, F.col("__cmp_rep"))
@@ -179,67 +135,55 @@ def compact(spark: SparkSession, table: Table,
               .sortWithinPartitions("conv_id", "turn_idx"))
         staged = stage_dataframe(table, df)
         if len(staged) != n:
-            # retries-gated like the commit-conflict handler below: a
+            # retries-gated like the commit-conflict retry below: a
             # concurrent MoR merge landing a fresh delete before every
             # replan would otherwise recurse unbounded
             if dels and retries > 0:
                 # a group's rows were ALL shadowed by equality deletes →
                 # its partition wrote no file and the positional
-                # part↔group alignment is broken. Recover by folding the
-                # delete backlog first (rewrite_deletes also bin-packs the
-                # shadowed files), then replan this compaction clean.
-                ckpt.abandon({"conflict": "group fully deleted; folding "
-                                          "backlog and replanning"})
-                rewrite_deletes(spark, table, target_bytes,
-                                pass_id=f"{pass_id}-fold", branch=branch)
-                return compact(spark, table, target_bytes,
-                               pass_id=f"{pass_id}-replan",
-                               retries=retries - 1, branch=branch)
+                # part↔group alignment is broken. Nothing is recorded (the
+                # staged files are sweepable orphans); the caller folds
+                # the backlog and replans.
+                replan = True
+                return None
             raise RuntimeError(
                 f"compaction wrote {len(staged)} files for {n} groups — "
                 "an empty group partition broke part↔group alignment"
                 + (" (replan retries exhausted)" if dels else ""))
         # parts come back sorted by part index == shuffle partition id ==
-        # plan position (the representative construction guarantees it)
-        for j, (i, group) in enumerate(todo):
-            task_id = f"group-{i:05d}"
-            out = staged[j]
-            ckpt.record(TaskRecord(
-                pass_id, "compact", task_id,
-                input_files=[e.path for e in group],
-                output_files=[out.path],
-                rows=out.record_count, bytes=out.file_size_bytes,
-                skew_factor=round(out.record_count / max(1.0, mean_rows), 3)))
-            results.append((task_id, [e.path for e in group], [out]))
+        # plan position (the representative construction guarantees it);
+        # one lineage record per group
+        return [StagedTask("__plan__", [], [],
+                           extra={"deletes": sorted(d.path for d in dels)}),
+                *[StagedTask(f"group-{i:05d}", [e.path for e in group],
+                             [out], skew_factor=round(
+                                 out.record_count / max(1.0, mean_rows), 3))
+                  for i, (group, out) in enumerate(zip(groups, staged))]]
 
-    removed = {p for _, ins, _ in results for p in ins}
-    added = [e for _, _, outs in results for e in outs]
-    from .format import CommitConflictError
     try:
-        snap = table.commit("compact", added=added, removed_paths=removed,
-                            summary={"pass_id": pass_id,
-                                     "groups": len(groups)},
-                            expected_delete_paths=expected_dels,
-                            branch=branch)
+        # one output file per group
+        snap = run_rewrite(table, "compact", pass_id, branch, stage,
+                           summary=lambda req: {"groups": len(req.files)})
     except CommitConflictError:
         # lost the race: some planned input files were replaced while this
         # pass ran. Compaction's plan is derived purely from the manifest,
-        # so the clean recovery is abandon + replan from the fresh snapshot
-        # (bounded retries; staged output of the lost attempt becomes a
-        # sweepable orphan via ckpt.abandon).
-        ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
+        # so the clean recovery is a replan from the fresh snapshot
+        # (bounded retries; the lost attempt was abandoned, its staged
+        # output is a sweepable orphan).
         if retries <= 0:
             raise
         return compact(spark, table, target_bytes,
                        pass_id=f"{pass_id}-retry", retries=retries - 1,
                        branch=branch)
-    ckpt.finalize({"snapshot_id": snap.snapshot_id})
+    if replan:
+        # fold the delete backlog first (rewrite_deletes also bin-packs
+        # the shadowed files), then replan this compaction clean
+        rewrite_deletes(spark, table, target_bytes,
+                        pass_id=f"{pass_id}-fold", branch=branch)
+        return compact(spark, table, target_bytes,
+                       pass_id=f"{pass_id}-replan",
+                       retries=retries - 1, branch=branch)
     return snap
-
-
-def _restat(table: Table, rel_path: str) -> DataFile:
-    from .write import restat_staged
-    return restat_staged(table, rel_path)
 
 
 def rewrite_deletes(spark: SparkSession, table: Table,
@@ -257,89 +201,57 @@ def rewrite_deletes(spark: SparkSession, table: Table,
     (instead of CoW paying it per merge), and scans in between pay one
     small anti-join. Checkpointed and conflict-validated like every other
     rewrite."""
-    from .merge import _adopt_crashed_commit
     from .write import range_bounds_from_entries
-    pass_id = pass_id or uuid.uuid4().hex[:12]
-    ckpt = CheckpointLog(table.root, pass_id, "rewrite-deletes")
-    if ckpt.pass_committed():
-        return _plan_snapshot(table, branch)
-    adopted = _adopt_crashed_commit(table, ckpt, pass_id)
-    if adopted is not None:
-        return adopted
-    from .scan import shadowable
-    plan_snap = _plan_snapshot(table, branch)
-    if branch is not None and plan_snap is None:
-        return None  # null-rooted branch: no backlog yet
-    dels = table.manifest_entries(plan_snap, content="deletes")
-    if not dels:
-        return None
-    # manifest-list shadow pruning: whole data manifests at/above the
-    # backlog's max delete sequence hold no shadowable file and are never
-    # opened — at the 100 TB design point the freshly-compacted bulk of
-    # the tree skips here. The threshold comes from the manifest-list
-    # del_max_seq summaries when present (no delete manifest consulted),
-    # else from the already-opened delete entries (legacy snapshots).
-    from .scan import delete_max_seq
-    sums = [plan_snap.manifest_meta.get(mf) for mf in plan_snap.manifests]
-    if any(md is None or (md.get("deletes", 0)
-                          and md.get("del_max_seq") is None)
-           for md in sums):
-        # a legacy manifest (no summary) might carry deletes the summary
-        # walk can't see — an UNDERSTATED threshold would skip shadowable
-        # data and resurrect rows, so fall back to the opened entries
-        del_max = max(delete_max_seq(d) for d in dels)
-    else:
-        del_max = max(md["del_max_seq"] for md in sums
-                      if md.get("del_max_seq") is not None)
-    data = table.manifest_entries(plan_snap, seq_below=del_max)
-    affected = [e for e in data if any(shadowable(e, d) for d in dels)]
-    removed = {e.path for e in affected} | {d.path for d in dels}
-    expected_dels = {d.path for d in dels}
-    rec = ckpt.get("rewrite")
-    if rec is not None:
-        staged = [_restat(table, p) for p in rec["output_files"]]
-        # replay the RECORDED plan: a delete file committed between crash
-        # and resume was never applied to the staged output — recomputing
-        # removed/expected from the live manifest would retire it unapplied
-        # (resurrection); with the recorded sets the commit validation
-        # below surfaces it as a conflict instead
-        ext = rec.get("extra") or {}
-        removed = set(ext.get("removed", removed))
-        if "deletes" in ext:
-            expected_dels = set(ext["deletes"])
-    elif not affected:
-        staged = []
-    else:
-        from .scan import read_with_deletes
-        df = read_with_deletes(spark, table, affected, dels)
-        in_bytes = sum(e.file_size_bytes for e in affected)
-        num_files = max(1, round(in_bytes / target_bytes))
-        bounds = range_bounds_from_entries(affected, num_files, "conv_id",
-                                           turn_col="turn_idx")
-        staged = stage_dataframe(table, df, num_files=num_files,
-                                 range_cols=["conv_id", "turn_idx"],
-                                 sort_cols=["conv_id", "turn_idx"],
-                                 bounds=bounds)
-        ckpt.record(TaskRecord(
-            pass_id, "rewrite-deletes", "rewrite",
-            input_files=[e.path for e in affected] + [d.path for d in dels],
-            output_files=[e.path for e in staged],
-            rows=sum(e.record_count for e in staged),
-            bytes=sum(e.file_size_bytes for e in staged),
-            extra={"removed": sorted(removed),
-                   "deletes": sorted(expected_dels)}))
-    from .format import CommitConflictError
-    try:
-        snap = table.commit(
-            "rewrite-deletes", added=staged,
-            removed_paths=removed,
-            summary={"pass_id": pass_id, "delete_files_folded": len(dels)},
-            expected_delete_paths=expected_dels, branch=branch)
-    except CommitConflictError:
-        ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
-        raise
-    ckpt.finalize({"snapshot_id": snap.snapshot_id})
-    return snap
+
+    def stage(snap: Snapshot | None) -> list[StagedTask] | None:
+        from .scan import delete_max_seq, read_with_deletes, shadowable
+        dels = table.manifest_entries(snap, content="deletes")
+        if not dels:
+            return None
+        # manifest-list shadow pruning: whole data manifests at/above the
+        # backlog's max delete sequence hold no shadowable file and are
+        # never opened — at the 100 TB design point the freshly-compacted
+        # bulk of the tree skips here. The threshold comes from the
+        # manifest-list del_max_seq summaries when present (no delete
+        # manifest consulted), else from the already-opened delete entries
+        # (legacy snapshots).
+        sums = [snap.manifest_meta.get(mf) for mf in snap.manifests]
+        if any(md is None or (md.get("deletes", 0)
+                              and md.get("del_max_seq") is None)
+               for md in sums):
+            # a legacy manifest (no summary) might carry deletes the
+            # summary walk can't see — an UNDERSTATED threshold would skip
+            # shadowable data and resurrect rows, so fall back to the
+            # opened entries
+            del_max = max(delete_max_seq(d) for d in dels)
+        else:
+            del_max = max(md["del_max_seq"] for md in sums
+                          if md.get("del_max_seq") is not None)
+        data = table.manifest_entries(snap, seq_below=del_max)
+        affected = [e for e in data if any(shadowable(e, d) for d in dels)]
+        staged: list[DataFile] = []
+        if affected:
+            df = read_with_deletes(spark, table, affected, dels)
+            num_files = max(1, round(sum(e.file_size_bytes for e in affected)
+                                     / target_bytes))
+            bounds = range_bounds_from_entries(affected, num_files,
+                                               "conv_id",
+                                               turn_col="turn_idx")
+            staged = stage_dataframe(table, df, num_files=num_files,
+                                     range_cols=["conv_id", "turn_idx"],
+                                     sort_cols=["conv_id", "turn_idx"],
+                                     bounds=bounds)
+        # the recorded sets are what the commit replays: a delete file
+        # committed after staging was never applied to the staged output,
+        # so it must surface as a conflict, never be retired unapplied
+        inputs = [e.path for e in affected] + [d.path for d in dels]
+        return [StagedTask("rewrite", inputs, staged,
+                           extra={"removed": sorted(inputs),
+                                  "deletes": sorted(d.path for d in dels)})]
+
+    return run_rewrite(
+        table, "rewrite-deletes", pass_id, branch, stage,
+        summary=lambda req: {"delete_files_folded": len(req.deletes)})
 
 
 def compact_deletes(spark: SparkSession, table: Table,
@@ -370,56 +282,28 @@ def compact_deletes(spark: SparkSession, table: Table,
     Reference anchor: the per-run cell-grain worklist CSV the reference
     accumulates (``codes/utils/inject_missing_values.py:23``) — here the
     accumulated worklists are folded into one deduplicated file."""
-    from .merge import _adopt_crashed_commit
     from .scan import _DELETE_SEQ_COL, MERGE_KEYS, delete_rows_with_seq
-    pass_id = pass_id or uuid.uuid4().hex[:12]
-    ckpt = CheckpointLog(table.root, pass_id, "compact-deletes")
-    if ckpt.pass_committed():
-        return _plan_snapshot(table, branch)
-    adopted = _adopt_crashed_commit(table, ckpt, pass_id)
-    if adopted is not None:
-        return adopted
-    fold_snap = _plan_snapshot(table, branch)
-    if branch is not None and fold_snap is None:
-        return None  # null-rooted branch: no backlog yet
-    dels = table.manifest_entries(fold_snap, content="deletes")
-    if len(dels) <= 1:
-        return None
-    removed = {d.path for d in dels}
-    rec = ckpt.get("fold")
-    if rec is not None:
-        staged = [_restat(table, p) for p in rec["output_files"]]
-        removed = set((rec.get("extra") or {}).get("removed", removed))
-    else:
+
+    def stage(snap: Snapshot | None) -> list[StagedTask] | None:
+        dels = table.manifest_entries(snap, content="deletes")
+        if len(dels) <= 1:
+            return None
         df = (delete_rows_with_seq(spark, table, dels)
               .groupBy(*MERGE_KEYS)
               .agg(F.max(_DELETE_SEQ_COL).alias(_DELETE_SEQ_COL)))
         staged = stage_dataframe(table, df, num_files=1,
                                  sort_cols=list(MERGE_KEYS),
                                  content="deletes")
-        ckpt.record(TaskRecord(
-            pass_id, "compact-deletes", "fold",
-            input_files=sorted(removed),
-            output_files=[e.path for e in staged],
-            rows=sum(e.record_count for e in staged),
-            bytes=sum(e.file_size_bytes for e in staged),
-            extra={"removed": sorted(removed)}))
-    from .format import CommitConflictError
-    try:
-        # removed_paths non-empty → the commit's liveness validation runs:
-        # a concurrent rewrite_deletes/compact that retired one of our
-        # input delete files conflicts here instead of being resurrected
-        # by the folded copy
-        snap = table.commit("compact-deletes", added=staged,
-                            removed_paths=removed,
-                            summary={"pass_id": pass_id,
-                                     "delete_files_folded": len(removed)},
-                            branch=branch)
-    except CommitConflictError:
-        ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
-        raise
-    ckpt.finalize({"snapshot_id": snap.snapshot_id})
-    return snap
+        # removing the inputs makes the commit's liveness validation run:
+        # a concurrent rewrite_deletes/compact that retired one of them
+        # conflicts instead of being resurrected by the folded copy
+        removed = sorted(d.path for d in dels)
+        return [StagedTask("fold", removed, staged,
+                           extra={"removed": removed})]
+
+    return run_rewrite(
+        table, "compact-deletes", pass_id, branch, stage,
+        summary=lambda req: {"delete_files_folded": len(req.removed)})
 
 
 # ----------------------------------------------------------------- clustering
@@ -432,50 +316,19 @@ def cluster(spark: SparkSession, table: Table, strategy: str = "zorder",
     file a contiguous curve segment → tight min/max on BOTH hash(conv_id) and
     ts. One shuffle (the range exchange); the curve key itself is pure Spark
     SQL bit arithmetic (Z-order) or one Arrow-vectorized UDF (Hilbert)."""
-    from .merge import _adopt_crashed_commit
     assert strategy in ("zorder", "hilbert")
-    pass_id = pass_id or uuid.uuid4().hex[:12]
-    ckpt = CheckpointLog(table.root, pass_id, f"cluster-{strategy}")
-    if ckpt.pass_committed():
-        return _plan_snapshot(table, branch)
-    adopted = _adopt_crashed_commit(table, ckpt, pass_id)
-    if adopted is not None:
-        return adopted
-    plan_snap = _plan_snapshot(table, branch)
-    if branch is not None and plan_snap is None:
-        return None  # null-rooted branch: nothing to cluster yet
-    entries = table.manifest_entries(plan_snap)
-    delete_entries = table.manifest_entries(plan_snap, content="deletes")
-    in_paths = [e.path for e in entries]
-    total_bytes = sum(e.file_size_bytes for e in entries)
-    # never let the rewrite collapse to a 1-task sort on small tables — but
-    # keep the floor a function of DATA SIZE, not core count: workload shape
-    # must be identical at every parallelism level or N-vs-4N comparisons
-    # (and cross-run determinism) are meaningless
-    num_files = max(1, round(total_bytes / target_bytes))
-    if total_bytes > (1 << 20):
-        num_files = max(num_files, 16)
 
-    removed = set(in_paths) | {e.path for e in delete_entries}
-    expected_dels = {e.path for e in delete_entries}
-    rec = ckpt.get("rewrite")
-    if rec is not None:
-        staged = [_restat(table, p) for p in rec["output_files"]]
-        # replay the RECORDED removal/delete sets: the staged files embody
-        # the plan as of staging time — a delete or data file committed
-        # after the crash must surface as a commit conflict, not be
-        # silently retired/kept against stale output
-        ext = rec.get("extra") or {}
-        removed = set(ext.get("removed", removed))
-        if "deletes" in ext:
-            expected_dels = set(ext["deletes"])
-    else:
+    def stage(snap: Snapshot | None) -> list[StagedTask]:
         from .layout import curve_bounds
+        from .scan import read_with_deletes
+        entries = table.manifest_entries(snap)
+        delete_entries = table.manifest_entries(snap, content="deletes")
+        num_files = output_file_count(
+            sum(e.file_size_bytes for e in entries), target_bytes)
         # full rewrite folds the whole merge-on-read backlog: the read
         # applies the equality deletes (seq-split fast path) and the commit
-        # below retires the delete files (every data file they could
-        # shadow is replaced)
-        from .scan import read_with_deletes
+        # retires the delete files (every data file they could shadow is
+        # replaced)
         df = read_with_deletes(spark, table, entries, delete_entries)
         ts_b = ts_bounds_micros(entries)
         # curve-key quantiles over a two-column scan replace the range
@@ -489,33 +342,18 @@ def cluster(spark: SparkSession, table: Table, strategy: str = "zorder",
         out = cluster_dataframe(df, strategy=strategy, num_files=num_files,
                                 ts_bounds=ts_b, bounds=bounds)
         staged = stage_dataframe(table, out)
-        rows = sum(e.record_count for e in staged)
-        mean_rows = rows / max(1, len(staged))
-        ckpt.record(TaskRecord(
-            pass_id, f"cluster-{strategy}", "rewrite",
-            input_files=in_paths, output_files=[e.path for e in staged],
-            rows=rows, bytes=sum(e.file_size_bytes for e in staged),
-            skew_factor=round(max((e.record_count for e in staged), default=0)
-                              / max(1.0, mean_rows), 3),
-            extra={"removed": sorted(removed),
-                   "deletes": sorted(expected_dels)}))
-    from .format import CommitConflictError
-    try:
-        snap = table.commit(f"cluster-{strategy}", added=staged,
-                            removed_paths=removed,
-                            summary={"pass_id": pass_id,
-                                     "files": len(staged)},
-                            expected_delete_paths=expected_dels,
-                            branch=branch)
-    except CommitConflictError:
-        # full-table rewrite lost a race (e.g. to a merge): the staged
-        # layout is stale — abandon and let the caller's next cadence
-        # re-cluster the fresh snapshot (no auto-retry: another full
-        # rewrite should be a deliberate scheduling decision)
-        ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
-        raise
-    ckpt.finalize({"snapshot_id": snap.snapshot_id})
-    return snap
+        in_paths = [e.path for e in entries]
+        deletes = sorted(e.path for e in delete_entries)
+        return [StagedTask("rewrite", in_paths, staged,
+                           skew_factor=file_skew(staged),
+                           extra={"removed": sorted(in_paths + deletes),
+                                  "deletes": deletes})]
+
+    # a full-table rewrite that loses a race (e.g. to a merge) is abandoned
+    # and re-raised, not retried: another full rewrite should be a
+    # deliberate scheduling decision of the caller's next cadence
+    return run_rewrite(table, f"cluster-{strategy}", pass_id, branch, stage,
+                       summary=lambda req: {"files": len(req.files)})
 
 
 # ------------------------------------------------------------ manifest rewrite

@@ -25,18 +25,17 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from .checkpoint import CheckpointLog, TaskRecord
-from .format import DataFile, Snapshot, Table, collect_parquet_stats
+from .checkpoint import CommitRequest, StagedTask, file_skew, run_rewrite
+from .format import DataFile, Snapshot, Table
 from .index import _with_context, build_candidate_index, key_families, text_sig
-from .scan import (MERGE_KEYS, Predicate, conv_overlap, prune_files,  # noqa: F401
-                   scan)
-from .write import range_bounds_from_entries, stage_dataframe
+from .scan import MERGE_KEYS, Predicate, prune_files, scan
+from .write import (output_file_count, range_bounds_from_entries,
+                    stage_dataframe)
 
 def _tmark(label: str, t0: float) -> float:
     """ENGINE_TIMING=1 phase marks (stderr) — cheap observability for the
@@ -360,21 +359,6 @@ def _stage_mor(spark: SparkSession, table: Table, snap, source: DataFrame,
     return ins + dels
 
 
-def _adopt_crashed_commit(table: Table, ckpt: CheckpointLog,
-                          pass_id: str) -> Snapshot | None:
-    """If a previous run committed this pass's snapshot but died before
-    writing the checkpoint finalize record, adopt that snapshot instead of
-    re-committing (a re-commit would add the staged files under a SECOND
-    manifest while removing the already-removed inputs — duplicate rows on
-    scan). Reachable in routine streaming restarts (ingest_batch replays a
-    batch through merge_into with the same pass_id)."""
-    for s in reversed(table.snapshots()):
-        if s.summary.get("pass_id") == pass_id:
-            ckpt.finalize({"snapshot_id": s.snapshot_id, "adopted": True})
-            return s
-    return None
-
-
 def merge_into(spark: SparkSession, table: Table, source: DataFrame,
                update_map: dict[str, str],
                pass_id: str | None = None,
@@ -445,27 +429,15 @@ def merge_into(spark: SparkSession, table: Table, source: DataFrame,
     if mode == "mor" and curve is not None:
         raise ValueError("fused clustering (curve=) is a full rewrite — "
                          "incompatible with merge-on-read mode")
-    pass_id = pass_id or uuid.uuid4().hex[:12]
-    ckpt = CheckpointLog(table.root, pass_id, "merge")
-    if ckpt.pass_committed():
-        return (table.ref_snapshot(branch, allow_empty=True) if branch
-                else table.current_snapshot())
-    adopted = _adopt_crashed_commit(table, ckpt, pass_id)
-    if adopted is not None:
-        return adopted
-
     # the source pipeline (index build → keyed joins → updates) is consumed
     # twice below (predicate collect, rewrite probe); without persisting it
     # every consumer re-runs the whole DAG — the single biggest serial cost
     # in the maintenance pass
     source = source.persist()
-    # every path out of the body below — success, conflict, or
-    # any Spark/planner exception — must release the cached
-    # source (review finding: scattered per-path unpersists
-    # leaked it on every error path); unpersist is idempotent,
-    # so the pre-existing success-path calls stay harmless
-    try:
-        t0 = time.time()
+    t0 = time.time()
+
+    def stage(snap: Snapshot | None) -> list[StagedTask]:
+        nonlocal t0, broadcast_source, num_files, source_bytes
         if predicates is not None and source_rows is not None:
             # caller already knows the key domain (e.g. impute_merge: the
             # worklist spans most conversations, so pruning cannot drop a file)
@@ -490,11 +462,6 @@ def merge_into(spark: SparkSession, table: Table, source: DataFrame,
                 broadcast_source = source_bytes <= BROADCAST_MAX_BYTES
 
         t_meta = time.time()
-        snap = (table.ref_snapshot(branch, allow_empty=True) if branch
-                else table.current_snapshot())
-        if branch is not None and snap is None:
-            source.unpersist()
-            return None  # null-rooted branch: nothing to match against yet
         entries = table.manifest_entries(snap)
         affected = prune_files(entries, preds)
         affected_paths = [e.path for e in affected]
@@ -513,159 +480,94 @@ def merge_into(spark: SparkSession, table: Table, source: DataFrame,
                        and 0 < n_src <= _MOR_MAX_FRACTION * affected_rows))
         _tmark("merge.plan_metadata", t_meta)
 
-        removed_paths: set[str] = set() if use_mor else set(affected_paths)
-        rec = ckpt.get("rewrite")
-        if rec is not None:
-            from .write import restat_staged
-            staged = [restat_staged(table, p) for p in rec["output_files"]]
-            # a resumed pass replays the recorded strategy, not the re-derived
-            # one (the staged files already embody it); legacy records carry no
-            # 'removed' list — they were all CoW, removing their input files
-            ext = rec.get("extra") or {}
-            use_mor = bool(ext.get("mor"))
-            if use_mor:
-                removed_paths = set(ext.get("removed", []))
-            else:
-                removed_paths = set(ext.get("removed", rec["input_files"]))
-            # the delete set KNOWN AT STAGING time — a delete committed after
-            # the crash was not applied to the staged files, and the commit
-            # validation below must catch it (legacy records: no validation)
-            expected_dels = (set(ext["deletes"]) if "deletes" in ext else None)
-            # serializable MoR resume: the RECORDED planning file set, not a
-            # re-derivation from the live snapshot
-            mor_planned = (set(ext["affected"]) if "affected" in ext else None)
-        elif not affected:
-            staged = []
-            expected_dels = None
-            mor_planned = None
-        elif use_mor:
+        if not affected:
+            # nothing to rewrite: an empty snapshot, labelled by its mode
+            return ([StagedTask("rewrite", [], [],
+                                extra={"mor": True, "removed": []})]
+                    if use_mor else [])
+        if use_mor:
             staged = _stage_mor(spark, table, snap, source, update_map,
                                 broadcast_source, preds, source_bytes,
                                 target_bytes, n_src)
             t0 = _tmark("merge.mor_stage", t0)
-            serial = isolation == "serializable"
-            ckpt.record(TaskRecord(
-                pass_id, "merge", "rewrite",
-                input_files=affected_paths,
-                output_files=[e.path for e in staged],
-                rows=sum(e.record_count for e in staged),
-                bytes=sum(e.file_size_bytes for e in staged),
-                skew_factor=1.0, committed=False,
-                extra={"mor": True, "removed": [],
-                       **({"deletes": sorted(d.path for d in delete_entries),
-                           "affected": sorted(affected_paths),
-                           "serializable": True} if serial else {})}))
             # snapshot isolation: MoR removes nothing → nothing to validate.
-            # serializable: validate against the planning snapshot's delete set
-            # so a concurrent overlapping merge conflicts instead of silently
-            # losing last-sequence-wins.
-            expected_dels = ({d.path for d in delete_entries} if serial
-                             else None)
-            mor_planned = set(affected_paths) if serial else None
+            # serializable: validate against the planning snapshot's delete
+            # set and planned files, so a concurrent overlapping merge
+            # conflicts instead of silently losing last-sequence-wins.
+            serial = ({"deletes": sorted(d.path for d in delete_entries),
+                       "affected": sorted(affected_paths),
+                       "serializable": True}
+                      if isolation == "serializable" else {})
+            return [StagedTask("rewrite", affected_paths, staged,
+                               extra={"mor": True, "removed": [], **serial})]
+        # merge-on-read backlog: a raw file read would resurrect deleted
+        # rows — the delete-applied read (seq-split fast path) prevents it.
+        # The rewritten files take a NEW sequence number, so the folded
+        # deletes stop applying to them; when this rewrite covers the
+        # whole table the delete files themselves are dropped below.
+        from .scan import read_with_deletes
+        tgt = read_with_deletes(spark, table, affected, affected_dels)
+        removed = set(affected_paths)
+        if removed == {e.path for e in entries}:
+            removed |= {e.path for e in delete_entries}
+        out = build_rewrite(tgt, source, update_map, broadcast_source)
+        # Output file count derives from DATA SIZE; range bounds come from
+        # the affected files' manifest stats, so there is NO sampling job —
+        # repartitionByRange would compute the merge join twice.
+        if num_files is None:
+            num_files = output_file_count(
+                sum(e.file_size_bytes for e in affected), target_bytes)
+        if curve is not None:
+            # fused merge+cluster: the rewrite IS the clustering pass. The
+            # merge never updates conv_id/ts, so the curve-key distribution
+            # (hence the bounds) is identical pre- and post-merge — the
+            # caller computes bounds from the CHEAP pre-merge two-column
+            # scan, and the whole maintenance cadence pays ONE full rewrite
+            # instead of two (the second write was the worst-scaling stage
+            # of the pass).
+            from .layout import cluster_dataframe
+            out = cluster_dataframe(out, strategy=curve,
+                                    num_files=num_files,
+                                    ts_bounds=ts_bounds,
+                                    bounds=curve_bounds_list)
+            staged = stage_dataframe(table, out)
         else:
-            # merge-on-read backlog: a raw file read would resurrect deleted
-            # rows — the delete-applied read (seq-split fast path) prevents it.
-            # The rewritten files take a NEW sequence number, so the folded
-            # deletes stop applying to them; when this rewrite covers the
-            # whole table the delete files themselves are dropped below.
-            from .scan import read_with_deletes
-            tgt = read_with_deletes(spark, table, affected, affected_dels)
-            if set(affected_paths) == {e.path for e in entries}:
-                removed_paths |= {e.path for e in delete_entries}
-            out = build_rewrite(tgt, source, update_map, broadcast_source)
-            # Output file count derives from DATA SIZE (not core count, not scan
-            # partitioning — both vary with parallelism and would make the
-            # rewrite non-deterministic across cluster sizes). Range bounds come
-            # from the affected files' manifest stats, so there is NO sampling
-            # job — repartitionByRange would compute the merge join twice.
-            if num_files is None:
-                in_bytes = sum(e.file_size_bytes for e in affected)
-                num_files = max(1, round(in_bytes / target_bytes))
-                if in_bytes > (1 << 20):
-                    num_files = max(num_files, 16)
-            if curve is not None:
-                # fused merge+cluster: the rewrite IS the clustering pass. The
-                # merge never updates conv_id/ts, so the curve-key distribution
-                # (hence the bounds) is identical pre- and post-merge — the
-                # caller computes bounds from the CHEAP pre-merge two-column
-                # scan, and the whole maintenance cadence pays ONE full rewrite
-                # instead of two (the second write was the worst-scaling stage
-                # of the pass).
-                from .layout import cluster_dataframe
-                out = cluster_dataframe(out, strategy=curve,
-                                        num_files=num_files,
-                                        ts_bounds=ts_bounds,
-                                        bounds=curve_bounds_list)
-                staged = stage_dataframe(table, out)
-            else:
-                bounds = range_bounds_from_entries(affected, num_files,
-                                                   "conv_id",
-                                                   turn_col="turn_idx")
-                staged = stage_dataframe(table, out, num_files=num_files,
-                                         range_cols=list(MERGE_KEYS),
-                                         sort_cols=list(MERGE_KEYS),
-                                         bounds=bounds)
-            t0 = _tmark("merge.rewrite_stage", t0)
-            rows = sum(e.record_count for e in staged)
-            mean_rows = rows / max(1, len(staged))
-            skew = (max((e.record_count for e in staged), default=0)
-                    / max(1.0, mean_rows))
-            ckpt.record(TaskRecord(
-                pass_id, "merge", "rewrite",
-                input_files=affected_paths,
-                output_files=[e.path for e in staged],
-                rows=rows, bytes=sum(e.file_size_bytes for e in staged),
-                skew_factor=round(skew, 3), committed=False,
-                extra={"removed": sorted(removed_paths),
-                       "deletes": sorted(d.path for d in delete_entries)}))
-            # a delete file committed AFTER this plan was read would shadow
-            # rows the staged rewrite copied under a fresh sequence number —
-            # the commit validates against the known set (Iceberg's
-            # validateNoNewDeleteFiles)
-            expected_dels = {d.path for d in delete_entries}
-            mor_planned = None  # CoW removes its inputs: liveness check covers
+            bounds = range_bounds_from_entries(affected, num_files,
+                                               "conv_id",
+                                               turn_col="turn_idx")
+            staged = stage_dataframe(table, out, num_files=num_files,
+                                     range_cols=list(MERGE_KEYS),
+                                     sort_cols=list(MERGE_KEYS),
+                                     bounds=bounds)
+        t0 = _tmark("merge.rewrite_stage", t0)
+        # a delete file committed AFTER this plan was read would shadow
+        # rows the staged rewrite copied under a fresh sequence number —
+        # the commit validates against the recorded set (Iceberg's
+        # validateNoNewDeleteFiles)
+        return [StagedTask("rewrite", affected_paths, staged,
+                           skew_factor=file_skew(staged),
+                           extra={"removed": sorted(removed),
+                                  "deletes": sorted(d.path for d in
+                                                    delete_entries)})]
 
-        from .format import CommitConflictError, ConstraintViolation
+    def gate(req: CommitRequest, abandon) -> None:
+        # CoW staged output carries unchanged legacy rows — gate only the
+        # rows this merge touched (source keys); MoR insert files ARE
+        # exactly the touched rows, no key restriction needed. Runs on
+        # resumed staged files too.
         from .write import enforce_constraints
-        try:
-            # CoW staged output carries unchanged legacy rows — gate only the
-            # rows this merge touched (source keys); MoR insert files ARE
-            # exactly the touched rows, no key restriction needed
-            enforce_constraints(
-                spark, table, staged,
-                keys_df=None if use_mor else source,
-                on_violation=lambda n, x: ckpt.abandon(
-                    {"constraint": n, "expr": x}))
-        except ConstraintViolation:
-            source.unpersist()
-            raise
-        mor_key_ranges = ([e for e in staged if e.content == "deletes"]
-                          if use_mor and expected_dels is not None else None)
-        try:
-            new_snap = table.commit("merge", added=staged,
-                                    removed_paths=removed_paths,
-                                    summary={"pass_id": pass_id,
-                                             **({"mor": True} if use_mor
-                                                else {})},
-                                    expected_delete_paths=expected_dels,
-                                    conflict_key_ranges=mor_key_ranges,
-                                    branch=branch,
-                                    conflict_if_removed=(mor_planned
-                                                         if use_mor else None))
-        except CommitConflictError:
-            # a concurrent pass replaced our input files mid-rewrite: committing
-            # would resurrect their rows through our staged copies. Abandon the
-            # checkpoint (staged files become sweepable orphans) and surface the
-            # conflict — the caller must re-derive its update source from the
-            # fresh snapshot (a stale source could mis-update rewritten rows),
-            # so no blind auto-retry here.
-            ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
-            source.unpersist()
-            raise
+        enforce_constraints(
+            spark, table, req.files,
+            keys_df=None if req.extra.get("mor") else source,
+            on_violation=lambda n, x: abandon({"constraint": n, "expr": x}))
+
+    # every path out — success, conflict, or any Spark/planner exception —
+    # must release the cached source
+    try:
+        snap = run_rewrite(table, "merge", pass_id, branch, stage,
+                           check=gate)
         _tmark("merge.commit", t0)
-        ckpt.finalize({"snapshot_id": new_snap.snapshot_id})
-        source.unpersist()
-        return new_snap
+        return snap
     finally:
         source.unpersist()
 
@@ -711,125 +613,83 @@ def delete_where(spark: SparkSession, table: Table,
         raise ValueError("delete_where without predicates would drop the "
                          "whole table; do that explicitly via predicates "
                          "that match everything")
-    pass_id = pass_id or uuid.uuid4().hex[:12]
-    ckpt = CheckpointLog(table.root, pass_id, "delete")
-    if ckpt.pass_committed():
-        return (table.ref_snapshot(branch, allow_empty=True) if branch
-                else table.current_snapshot())
-    adopted = _adopt_crashed_commit(table, ckpt, pass_id)
-    if adopted is not None:
-        return adopted
-    snap = (table.ref_snapshot(branch, allow_empty=True) if branch
-            else table.current_snapshot())
-    if branch is not None and snap is None:
-        return None  # null-rooted branch: no rows can match yet
-    # two-level prune: manifest-list summaries skip whole manifests, file
-    # stats prune the rest — a targeted DELETE never parses the full
-    # manifest tree on the driver
-    affected = prune_files(
-        table.manifest_entries(snap, predicates=predicates), predicates)
-    if not affected:
-        return None
-    delete_entries = table.manifest_entries(snap, content="deletes")
-    full = [e for e in affected
-            if all(p.matches_all(e) for p in predicates)]
-    fullset = {e.path for e in full}
-    partial = [e for e in affected if e.path not in fullset]
 
-    removed: set[str] = set(fullset)
-    n_dead = sum(e.record_count for e in full)
-    staged: list[DataFile] = []
-    expected_dels: set[str] | None = None
-    rec = ckpt.get("rewrite")
-    if rec is not None:
-        from .write import restat_staged
-        staged.extend(restat_staged(table, p) for p in rec["output_files"])
-        ext = rec.get("extra") or {}
-        removed = set(ext.get("removed", []))
-        n_dead = int(ext.get("deleted_rows", 0))
-        expected_dels = (set(ext["deletes"]) if "deletes" in ext else None)
-        use_mor = bool(ext.get("mor"))
-    elif partial:
-        from .scan import read_with_deletes
-        from .scan import shadowable
-        applicable = [d for d in delete_entries
-                      if any(shadowable(e, d) for e in partial)]
-        live_part = read_with_deletes(spark, table, partial, applicable)
-        match = predicates[0].to_column()
-        for p in predicates[1:]:
-            match = match & p.to_column()
-        # dead side: a bare filter already treats NULL as no-match AND
-        # leaves the conjuncts pushable to the parquet scan; the survivor
-        # side needs the explicit NULL collapse (NOT over three-valued
-        # logic would silently drop null-columned rows)
-        dead = live_part.filter(match).persist()
-        n_part_dead = dead.count()
-        part_rows = sum(e.record_count for e in partial)
-        n_dead += n_part_dead
-        use_mor = (mode == "mor"
-                   or (mode == "auto"
-                       and 0 < n_part_dead
-                       <= _MOR_MAX_FRACTION * part_rows))
-        if n_part_dead == 0:
-            pass  # residue empty: only the whole-file drops commit
-        elif use_mor:
-            staged = stage_dataframe(table, dead.select(*MERGE_KEYS),
-                                     num_files=1,
-                                     sort_cols=list(MERGE_KEYS),
-                                     content="deletes")
-        else:
-            removed |= {e.path for e in partial}
-            survivors = live_part.filter(
-                ~F.coalesce(match, F.lit(False)))
-            num_files = max(1, round(sum(e.file_size_bytes
-                                         for e in partial) / target_bytes))
-            bounds = range_bounds_from_entries(partial, num_files,
-                                               "conv_id",
-                                               turn_col="turn_idx")
-            staged = stage_dataframe(table, survivors, num_files=num_files,
-                                     range_cols=list(MERGE_KEYS),
-                                     sort_cols=list(MERGE_KEYS),
-                                     bounds=bounds)
-            # survivors were copied under a fresh sequence number: a delete
-            # file landing concurrently must conflict (it could shadow a
-            # copied row) — same validateNoNewDeleteFiles rule as MERGE
-            expected_dels = {d.path for d in delete_entries}
-        dead.unpersist()
-        ckpt.record(TaskRecord(
-            pass_id, "delete", "rewrite",
-            input_files=sorted({e.path for e in affected}),
-            output_files=[e.path for e in staged],
-            rows=sum(e.record_count for e in staged),
-            bytes=sum(e.file_size_bytes for e in staged),
-            committed=False,
-            extra={"mor": use_mor, "removed": sorted(removed),
-                   "deleted_rows": n_dead,
-                   **({"deletes": sorted(expected_dels)}
-                      if expected_dels is not None else {})}))
-    else:
-        use_mor = False
-        ckpt.record(TaskRecord(
-            pass_id, "delete", "rewrite",
-            input_files=sorted(fullset), output_files=[],
-            committed=False,
-            extra={"mor": False, "removed": sorted(removed),
-                   "deleted_rows": n_dead}))
+    def stage(snap: Snapshot | None) -> list[StagedTask] | None:
+        # two-level prune: manifest-list summaries skip whole manifests,
+        # file stats prune the rest — a targeted DELETE never parses the
+        # full manifest tree on the driver
+        affected = prune_files(
+            table.manifest_entries(snap, predicates=predicates), predicates)
+        if not affected:
+            return None
+        full = [e for e in affected
+                if all(p.matches_all(e) for p in predicates)]
+        fullset = {e.path for e in full}
+        partial = [e for e in affected if e.path not in fullset]
+        removed: set[str] = set(fullset)
+        n_dead = sum(e.record_count for e in full)
+        staged: list[DataFile] = []
+        use_mor, deletes = False, {}
+        if partial:
+            from .scan import read_with_deletes, shadowable
+            delete_entries = table.manifest_entries(snap, content="deletes")
+            applicable = [d for d in delete_entries
+                          if any(shadowable(e, d) for e in partial)]
+            live_part = read_with_deletes(spark, table, partial, applicable)
+            match = predicates[0].to_column()
+            for p in predicates[1:]:
+                match = match & p.to_column()
+            # dead side: a bare filter already treats NULL as no-match AND
+            # leaves the conjuncts pushable to the parquet scan; the
+            # survivor side needs the explicit NULL collapse (NOT over
+            # three-valued logic would silently drop null-columned rows)
+            dead = live_part.filter(match).persist()
+            n_part_dead = dead.count()
+            part_rows = sum(e.record_count for e in partial)
+            n_dead += n_part_dead
+            use_mor = (mode == "mor"
+                       or (mode == "auto"
+                           and 0 < n_part_dead
+                           <= _MOR_MAX_FRACTION * part_rows))
+            if n_part_dead == 0:
+                pass  # residue empty: only the whole-file drops commit
+            elif use_mor:
+                staged = stage_dataframe(table, dead.select(*MERGE_KEYS),
+                                         num_files=1,
+                                         sort_cols=list(MERGE_KEYS),
+                                         content="deletes")
+            else:
+                removed |= {e.path for e in partial}
+                survivors = live_part.filter(
+                    ~F.coalesce(match, F.lit(False)))
+                num_files = max(1, round(sum(e.file_size_bytes
+                                             for e in partial)
+                                         / target_bytes))
+                bounds = range_bounds_from_entries(partial, num_files,
+                                                   "conv_id",
+                                                   turn_col="turn_idx")
+                staged = stage_dataframe(table, survivors,
+                                         num_files=num_files,
+                                         range_cols=list(MERGE_KEYS),
+                                         sort_cols=list(MERGE_KEYS),
+                                         bounds=bounds)
+                # survivors were copied under a fresh sequence number: a
+                # delete file landing concurrently must conflict (it could
+                # shadow a copied row) — same validateNoNewDeleteFiles rule
+                # as MERGE
+                deletes = {"deletes": sorted(d.path
+                                             for d in delete_entries)}
+            dead.unpersist()
+        return [StagedTask("rewrite", sorted({e.path for e in affected}),
+                           staged,
+                           extra={"mor": use_mor, "removed": sorted(removed),
+                                  "deleted_rows": n_dead, **deletes})]
 
-    if not removed and not staged:
-        ckpt.finalize({"noop": True})
-        return None
-    from .format import CommitConflictError
-    try:
-        new_snap = table.commit(
-            "delete", added=staged, removed_paths=removed,
-            summary={"pass_id": pass_id, "deleted_rows": n_dead,
-                     **({"mor": True} if use_mor else {})},
-            expected_delete_paths=expected_dels, branch=branch)
-    except CommitConflictError:
-        ckpt.abandon({"conflict": "inputs replaced by concurrent commit"})
-        raise
-    ckpt.finalize({"snapshot_id": new_snap.snapshot_id})
-    return new_snap
+    return run_rewrite(
+        table, "delete", pass_id, branch, stage,
+        summary=lambda req: {"deleted_rows":
+                             int(req.extra.get("deleted_rows", 0))},
+        commit_empty=False)
 
 
 def impute_merge(spark: SparkSession, table: Table,
@@ -861,10 +721,8 @@ def impute_merge(spark: SparkSession, table: Table,
         from .format import ts_bounds_micros
         from .layout import curve_key
         entries = table.manifest_entries()
-        in_bytes = sum(e.file_size_bytes for e in entries)
-        n_out = max(1, round(in_bytes / target_bytes))
-        if in_bytes > (1 << 20):
-            n_out = max(n_out, 16)
+        n_out = output_file_count(
+            sum(e.file_size_bytes for e in entries), target_bytes)
         ts_b = ts_bounds_micros(entries)
         curve_prep = {"n_out": n_out, "ts_b": ts_b,
                       "rows_total": sum(e.record_count for e in entries)}

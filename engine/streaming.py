@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoint import plan_snapshot
 from .format import Table
 from .merge import MERGE_KEYS, _source_predicates, merge_into
 from .write import append
@@ -40,8 +41,7 @@ def ingest_batch(spark: SparkSession, table: Table, batch: DataFrame,
     against the BRANCH state, so stacked batches compose); main is
     untouched until ``Table.fast_forward`` publishes the audited stream."""
     batch = batch.dropDuplicates(list(MERGE_KEYS)).persist()
-    head = (table.ref_snapshot(branch, allow_empty=True) if branch
-            else table.current_snapshot())
+    head = plan_snapshot(table, branch)
     if head is None:
         append(table, batch, num_files=target_files or 1,
                range_cols=list(MERGE_KEYS), sort_cols=list(MERGE_KEYS),

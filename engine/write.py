@@ -219,6 +219,16 @@ def range_bounds_from_entries(entries: list[DataFile], num_files: int,
     return bounds
 
 
+def output_file_count(in_bytes: int, target_bytes: int) -> int:
+    """Files a full rewrite of ``in_bytes`` writes: ~target-sized, but at
+    least 16 above 1 MiB so a small table never collapses to a one-task
+    sort. A function of DATA SIZE only, never of core count or scan
+    partitioning: the layout must be identical at every parallelism level,
+    or N-vs-4N comparisons (and cross-run determinism) are meaningless."""
+    n = max(1, round(in_bytes / target_bytes))
+    return max(n, 16) if in_bytes > (1 << 20) else n
+
+
 def stage_dataframe(table: Table, df: DataFrame,
                     num_files: int | None = None,
                     range_cols: list[str] | None = None,

@@ -326,39 +326,6 @@ def test_mor_cow_equivalence_under_random_op_sequence(spark, tmp_table_root,
     assert sorted_rows(scan(spark, t_mor)) == sorted_rows(scan(spark, t_cow))
 
 
-def test_rewrite_deletes_resume_after_crash(spark, tmp_table_root, tmp_path):
-    """Crash between rewrite_deletes' staging and its snapshot swap → a
-    rerun with the same pass_id adopts the staged files (checkpoint) and
-    converges to the same state as a clean run on a twin table."""
-    t, df = _setup(spark, tmp_table_root)
-    t2, _ = _setup(spark, str(tmp_path / "twin"))
-    for tbl, tag in ((t, "a"), (t2, "b")):
-        merge_into(spark, tbl, _sparse_source(spark, tbl),
-                   {"text": "upd_text"}, pass_id=f"m-{tag}", mode="mor")
-
-    real_commit = Table.commit
-    calls = {"n": 0}
-
-    def exploding_commit(self, *a, **k):
-        calls["n"] += 1
-        raise RuntimeError("simulated crash before snapshot swap")
-
-    Table.commit = exploding_commit
-    try:
-        try:
-            rewrite_deletes(spark, t, pass_id="rw-crashy")
-        except RuntimeError:
-            pass
-    finally:
-        Table.commit = real_commit
-    assert calls["n"] == 1
-    snap = rewrite_deletes(spark, t, pass_id="rw-crashy")
-    assert snap is not None and snap.operation == "rewrite-deletes"
-    assert "delete_files" not in scan_stats(t)
-    rewrite_deletes(spark, t2, pass_id="rw-clean")
-    assert sorted_rows(scan(spark, t)) == sorted_rows(scan(spark, t2))
-
-
 def test_compact_handles_group_fully_deleted(spark, tmp_table_root):
     """Adversarial fold case: a compaction group whose rows are ALL
     shadowed by equality deletes. On this Spark version the empty group
