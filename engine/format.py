@@ -65,9 +65,18 @@ _WIDEN_OK = {
 
 
 def _arrow_sql_type(t) -> str:
-    """Spark SQL type string for a pyarrow field type (the physical types
-    this engine writes; anything else is a registry bug)."""
+    """Spark SQL type string for a pyarrow field type — the type Spark's
+    own footer inference gives the same parquet column (the physical types
+    this engine writes; anything else raises)."""
     import pyarrow as pa
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return f"array<{_arrow_sql_type(t.value_type)}>"
+    if pa.types.is_map(t):
+        return (f"map<{_arrow_sql_type(t.key_type)},"
+                f"{_arrow_sql_type(t.item_type)}>")
+    if pa.types.is_struct(t):
+        return "struct<" + ",".join(
+            f"{_quote(f.name)}:{_arrow_sql_type(f.type)}" for f in t) + ">"
     if pa.types.is_int8(t):
         return "tinyint"
     if pa.types.is_int16(t):
@@ -87,12 +96,66 @@ def _arrow_sql_type(t) -> str:
     if pa.types.is_binary(t) or pa.types.is_large_binary(t):
         return "binary"
     if pa.types.is_timestamp(t):
-        return "timestamp"
+        # a UTC-adjusted parquet timestamp is Spark's instant type; a
+        # tz-less (local) one is inferred as timestamp_ntz
+        return "timestamp" if t.tz is not None else "timestamp_ntz"
     if pa.types.is_date(t):
         return "date"
     if pa.types.is_decimal(t):
         return f"decimal({t.precision},{t.scale})"
     raise ValueError(f"unmapped physical parquet type: {t}")
+
+
+def _quote(name: str) -> str:
+    """A column name as a Spark DDL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def footer_types(path: str) -> dict[str, str]:
+    """Name → Spark SQL type of a parquet file's top-level columns, in file
+    order, read from its footer with pyarrow on the driver (no Spark job).
+    INT96 columns (legacy Spark timestamps, which pyarrow reports tz-less)
+    are ``timestamp``, as Spark reads them."""
+    with pq.ParquetFile(path) as pf:
+        leaves = [pf.schema.column(i) for i in range(len(pf.schema))]
+        arrow = pf.schema_arrow
+    int96 = {c.path for c in leaves if c.physical_type == "INT96"}
+    return {f.name: "timestamp" if f.name in int96
+            else _arrow_sql_type(f.type) for f in arrow}
+
+
+def resolve_schema_types(cols: list[dict], adds: list[dict] | None,
+                         paths: Iterable[str]) -> dict[int, str]:
+    """Spark SQL type of every live column id of the registry ``cols``: its
+    own ``type``, else the fixed transcript type, else its ``schema_adds``
+    record (all footer-free), else the first footer among ``paths`` (opened
+    lazily, in order, until every id is typed) carrying any name in its
+    history. An id none of those footers carries is absent from the
+    result. The fixed transcript columns cannot be renamed and an add's
+    record keeps its original name, so ``names[0]`` is authoritative for
+    both lookups."""
+    add_types = {a["name"]: a["type"] for a in (adds or [])}
+    out: dict[int, str] = {}
+    need = []
+    for c in cols:
+        if c.get("dropped"):
+            continue
+        t = (c.get("type") or _CORE_TYPES.get(c["names"][0])
+             or add_types.get(c["names"][0]))
+        if t is not None:
+            out[c["id"]] = t
+        else:
+            need.append(c)
+    for p in paths:
+        if not need:
+            break
+        phys = footer_types(p)
+        for c in list(need):
+            n = next((n for n in c["names"] if n in phys), None)
+            if n is not None:
+                out[c["id"]] = phys[n]
+                need.remove(c)
+    return out
 
 
 def _schema_state_of(meta: dict) -> dict | None:
@@ -524,57 +587,39 @@ class Table:
 
     def _backfill_schema_types(self, cols: list[dict],
                                adds: list[dict] | None = None) -> None:
-        """Resolve a Spark SQL type string for every live column id that
-        lacks one (base columns carry no ``type`` until the first widen
-        needs the full physical schema): the fixed transcript types and
-        any matching ``schema_adds`` record first (both footer-free), then
-        representative data footers until each id's physical name (any
-        name in its history) is seen. Idempotent; mutates ``cols`` in
-        place (caller persists)."""
-        need = [c for c in cols if "type" not in c and not c.get("dropped")]
-        # the fixed transcript columns need no footer (they cannot be
-        # renamed, so names[0] is authoritative) — and a pre-first-append
-        # table HAS no footer to consult. A registry bootstrapped from a
-        # post-add footer records added columns as typeless base names;
-        # their types are already in the schema_adds records (review
-        # finding) — resolve those without a footer too.
-        add_types = {a["name"]: a["type"] for a in (adds or [])}
-        for c in list(need):
-            t = _CORE_TYPES.get(c["names"][0]) or add_types.get(
-                c["names"][0])
-            if t is not None:
-                c["type"] = t
-                need.remove(c)
-        if not need:
+        """Persist a Spark SQL type for every live column id that lacks one
+        (base columns carry no ``type`` until the first widen needs the
+        full physical schema), resolved by ``resolve_schema_types`` — the
+        same resolver every scan's read schema uses — over the first 8
+        data footers. A pre-first-append table has no footer; its fixed
+        transcript columns and adds resolve without one. Idempotent;
+        mutates ``cols`` in place (caller persists)."""
+        live = [c for c in cols if not c.get("dropped")]
+        if all("type" in c for c in live):
             return
         entries = [e for e in self.manifest_entries(content="all")
                    if e.content == "data"]
-        for e in entries[:8]:
-            sch = pq.ParquetFile(os.path.join(self.root, e.path)) \
-                .schema_arrow
-            phys = {f.name: f.type for f in sch}
-            for c in list(need):
-                for n in c["names"]:
-                    if n in phys:
-                        c["type"] = _arrow_sql_type(phys[n])
-                        need.remove(c)
-                        break
-            if not need:
-                return
+        types = resolve_schema_types(
+            live, adds, (os.path.join(self.root, e.path)
+                         for e in entries[:8]))
+        need = [c["id"] for c in live if c["id"] not in types]
         if need:
             raise RuntimeError(
                 "cannot resolve physical types for column id(s) "
-                f"{[c['id'] for c in need]} from the first 8 data footers")
+                f"{need} from the first 8 data footers")
+        for c in live:
+            c["type"] = types[c["id"]]
 
     def widen_column(self, name: str, new_type: str) -> None:
         """Metadata-only type widening (Iceberg/Delta type promotion):
         ``tinyint→smallint→int→bigint`` and ``float→double``. No data file
-        is touched — Spark 4's parquet readers upcast narrow physical
-        columns when handed the wide read schema, so every scan switches
-        to an explicit registry-derived schema from the first widen on
-        (``engine.scan._table_reader``; plain ``mergeSchema`` refuses
-        mixed-width footers). Files written after the widen carry the wide
-        type physically; compaction migrates old files as it rewrites.
+        is touched: every scan already reads with an explicit schema
+        (``engine.scan._table_reader``), which for a table with a registry
+        carries each live id at its registry type, and Spark 4's parquet
+        readers upcast a narrow physical column to the wide read type in
+        place. So the widen only records the new type (and backfills the
+        other ids' types once). Files written after the widen carry the
+        wide type physically; compaction migrates old files as it rewrites.
         The fixed transcript columns cannot be widened (merge keys and
         cluster/imputation targets pin the core schema by design)."""
         if name in _CORE_COLS:
@@ -618,7 +663,7 @@ class Table:
         """Columns added by ``add_column`` after table creation, in add
         order: ``[{"name", "type", "added_in_version"}, ...]``. Data files
         written before an add lack the column physically; ``scan()``
-        reconciles them (schema-merge read + typed null fill)."""
+        reconciles them (the explicit read schema null-fills them)."""
         return self.load_metadata().get("schema_adds", [])
 
     def add_column(self, name: str, dtype: str) -> None:
@@ -718,8 +763,11 @@ class Table:
         meta = self.load_metadata()
         return [Snapshot.from_json(s) for s in meta["snapshots"]]
 
-    def current_snapshot(self) -> Snapshot | None:
-        meta = self.load_metadata()
+    def current_snapshot(self, meta: dict | None = None) -> Snapshot | None:
+        """The head snapshot, from ``meta`` when the caller already holds
+        the parsed metadata (else one parse)."""
+        if meta is None:
+            meta = self.load_metadata()
         sid = meta["current_snapshot_id"]
         if sid is None:
             return None
@@ -728,10 +776,12 @@ class Table:
                 return Snapshot.from_json(s)
         raise ValueError(f"current snapshot {sid} missing from snapshot log")
 
-    def snapshot(self, snapshot_id: int) -> Snapshot:
-        for s in self.snapshots():
-            if s.snapshot_id == snapshot_id:
-                return s
+    def snapshot(self, snapshot_id: int, meta: dict | None = None) -> Snapshot:
+        if meta is None:
+            meta = self.load_metadata()
+        for s in meta["snapshots"]:
+            if s["snapshot_id"] == snapshot_id:
+                return Snapshot.from_json(s)
         raise KeyError(f"snapshot {snapshot_id} not found (expired?)")
 
     def current_ancestors(self, meta: dict | None = None) -> set[int]:
@@ -748,7 +798,8 @@ class Table:
             node = by_id[node].get("parent_id")
         return out
 
-    def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
+    def snapshot_as_of(self, timestamp_ms: int,
+                       meta: dict | None = None) -> Snapshot:
         """Time travel: the latest MAIN-LINEAGE snapshot committed at or
         before ``timestamp_ms`` (Iceberg's FOR TIMESTAMP AS OF). Restricted
         to ancestors of the current snapshot: unpublished branch commits
@@ -757,10 +808,13 @@ class Table:
         rolled-over snapshots stop being "the table's state at T" the
         moment a rollback rewrites content lineage. Branch state is
         readable only via explicit ``ref=``/``snapshot_id=``. Raises
-        KeyError when every retained ancestor is newer (expired history)."""
-        lineage = self.current_ancestors()
+        KeyError when every retained ancestor is newer (expired history).
+        ``meta``: the already-parsed metadata (else one parse)."""
+        if meta is None:
+            meta = self.load_metadata()
+        lineage = self.current_ancestors(meta)
         best = None
-        for s in self.snapshots():
+        for s in map(Snapshot.from_json, meta["snapshots"]):
             if s.snapshot_id not in lineage:
                 continue
             if s.timestamp_ms <= timestamp_ms and \

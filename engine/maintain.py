@@ -81,10 +81,8 @@ def compact(spark: SparkSession, table: Table,
 
     The single-job design has no per-group job fan-out to bound — cap
     cluster load with Spark's own scheduler pools / dynamic-allocation
-    limits. Note the unified ``spark.read.parquet`` over every group also
-    assumes a UNIFORM schema across all planned files (true for this
-    engine's tables, which share one manifest schema; the old per-group
-    reads tolerated drift)."""
+    limits. The unified read over every group takes ONE explicit schema
+    for all planned files (``engine.scan._table_reader``)."""
     from .write import partition_reps
     pass_id = pass_id or uuid.uuid4().hex[:12]
     replan = False
@@ -107,19 +105,19 @@ def compact(spark: SparkSession, table: Table,
         mapping = F.broadcast(
             spark.createDataFrame(route, "__cmp_base string, __cmp_rep long"))
         planned = [e for g in groups for e in g]
-        paths = [os.path.join(table.root, e.path) for e in planned]
-        from .scan import _table_reader, reconcile_schema
-        # schema-merging reader: a bin-pack group can mix pre- and
-        # post-add_column files — a plain read would take one footer's
-        # schema and silently drop the evolved column from the rewrite
-        df = (_table_reader(spark, table).parquet(*paths)
+        from .scan import _read_entries, reconcile_schema
+        # one explicit read schema for every group: a bin-pack group can
+        # mix pre- and post-add_column files, and a pre-add file
+        # null-fills the added column instead of dropping it
+        meta = table.load_metadata()
+        df = (_read_entries(spark, table, meta, planned)
               .withColumn("__cmp_base",
                           F.element_at(F.split(F.input_file_name(), "/"), -1)))
         # physical schema migration rides the rewrite for free: renamed
         # columns come out under their current name, dropped columns'
         # bytes are actually shed (the metadata-only rename/drop promised
         # exactly this at the next rewrite)
-        df = reconcile_schema(table, df)
+        df = reconcile_schema(table, df, meta)
         if dels:
             # merge-on-read: fold the equality deletes into the rewritten
             # groups (the compacted file takes a new sequence number, so an

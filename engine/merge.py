@@ -33,7 +33,7 @@ from pyspark.sql.types import LongType
 from .checkpoint import CommitRequest, StagedTask, file_skew, run_rewrite
 from .format import DataFile, Snapshot, Table
 from .index import _with_context, build_candidate_index, key_families, text_sig
-from .scan import MERGE_KEYS, Predicate, prune_files, scan
+from .scan import KEY_SCHEMA, MERGE_KEYS, Predicate, prune_files, scan
 from .write import (output_file_count, range_bounds_from_entries,
                     stage_dataframe)
 
@@ -351,9 +351,8 @@ def _stage_mor(spark: SparkSession, table: Table, snap, source: DataFrame,
             except OSError:
                 pass
         return []
-    del_keys = spark.read.parquet(
-        *[os.path.join(table.root, e.path) for e in ins]) \
-        .select(*MERGE_KEYS)
+    del_keys = spark.read.schema(KEY_SCHEMA).parquet(
+        *[os.path.join(table.root, e.path) for e in ins])
     dels = stage_dataframe(table, del_keys, num_files=1,
                            sort_cols=list(MERGE_KEYS), content="deletes")
     return ins + dels

@@ -18,7 +18,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .format import DataFile, Snapshot, Table
+from .format import (DataFile, Snapshot, Table, _quote, footer_types,
+                     resolve_schema_types)
 
 # broadcast the (small) equality-delete set up to this many bytes; past it
 # the anti-join falls back to a shuffle join (AQE picks the side) — at
@@ -29,47 +30,63 @@ MERGE_KEYS = ("conv_id", "turn_idx")
 # sequence number (the folded FILE carries the fold commit's sequence, which
 # must not change which data files the row shadows)
 _DELETE_SEQ_COL = "__delete_seq"
+# fixed read schema of the merge keys (the fixed transcript types): staged
+# merge-on-read inserts read back for their keys, and equality-delete files
+# (plus ``__delete_seq``, which null-fills in raw merge-written ones)
+KEY_SCHEMA = "conv_id string, turn_idx int"
 
 
-def _table_reader(spark: SparkSession, table: Table, meta: dict | None = None):
-    """The parquet reader for this table's data files: schema-merging ONLY
-    when the table has evolved (``add_column`` / ``rename_column`` /
-    ``drop_column``) — pre-add files lack the new column physically, and
-    pre-rename files carry the old physical name, so a plain read would
-    take one file's footer as THE schema and silently drop columns from
-    the scan. Un-evolved tables (the steady state) pay zero extra footer
-    work.
+def _read_schema(meta: dict, paths: list[str]) -> str:
+    """The explicit read schema (a Spark DDL string) of a read of the table
+    data files ``paths`` under the schema registry ``meta``.
 
-    After the first ``widen_column`` the reader instead carries an
-    EXPLICIT schema derived from the column-id registry (every live id's
-    historical names at the id's current — possibly widened — type):
-    ``mergeSchema`` refuses mixed-width footers outright, while Spark 4's
-    parquet readers upcast a narrow physical column to the wide read type
-    in place. The explicit schema subsumes mergeSchema's other jobs too —
-    a name absent from a file null-fills, a dropped id's names are simply
-    omitted — and skips the footer-merge pass entirely."""
+    With a column-id registry (``schema_cols``): every live id under each
+    of its historical names, at the id's type (``resolve_schema_types``:
+    registry type, fixed transcript type, ``schema_adds`` record, then the
+    footers of ``paths``; an id none of them carries is left out, as a
+    footer-merging read would). Without one (absent, or ``[]`` in a
+    pinned ``schema_state``): the footer of ``paths[0]`` without ``__``
+    columns, then every ``schema_adds`` column it lacks."""
+    cols = meta.get("schema_cols") or []
+    adds = meta.get("schema_adds") or []
+    if cols:
+        types = resolve_schema_types(cols, adds, paths)
+        fields = [(n, types[c["id"]]) for c in cols
+                  if c["id"] in types for n in c["names"]]
+    else:
+        fields = [(n, t) for n, t in footer_types(paths[0]).items()
+                  if not n.startswith("__")]
+        have = {n for n, _ in fields}
+        fields += [(a["name"], a["type"]) for a in adds
+                   if a["name"] not in have]
+    return ", ".join(f"{_quote(n)} {t}" for n, t in fields)
+
+
+def _table_reader(spark: SparkSession, table: Table, meta: dict | None,
+                  paths: list[str]):
+    """The parquet reader for the table data files ``paths``: always
+    ``spark.read.schema(...)`` with the explicit schema ``_read_schema``
+    derives from the table's own metadata, so no read pays Spark's
+    footer-inference job. The same schema serves an evolved table: a name
+    absent from a file (a pre-add file, a pre- or post-rename file)
+    null-fills, a dropped id's names are simply not read, and a narrow
+    physical column is upcast in place to its widened type (a
+    footer-merging read refuses mixed widths). ``reconcile_schema`` then
+    maps historical names to current ones."""
     # callers on the scan path pass the already-loaded metadata: one scan
     # otherwise re-parses the full table metadata (snapshot log +
-    # manifest-list summaries) up to 5x — driver-side seconds at the
-    # 100 TB design point, the exact cost two-level planning removes
+    # manifest-list summaries) once per reader
     if meta is None:
         meta = table.load_metadata()
-    cols = meta.get("schema_cols", [])
-    if any(c.get("widened") for c in cols):
-        from pyspark.sql import types as T
-        fields = []
-        for c in cols:
-            if c.get("dropped"):
-                continue
-            dt = T._parse_datatype_string(c["type"])
-            for n in c["names"]:
-                fields.append(T.StructField(n, dt, True))
-        return spark.read.schema(T.StructType(fields))
-    reader = spark.read
-    if meta.get("schema_adds") or any(
-            len(c["names"]) > 1 or c.get("dropped") for c in cols):
-        reader = reader.option("mergeSchema", "true")
-    return reader
+    return spark.read.schema(_read_schema(meta, paths))
+
+
+def _read_entries(spark: SparkSession, table: Table, meta: dict | None,
+                  entries: list[DataFile]) -> DataFrame:
+    """The raw (pre-reconciliation) read of these data files, through
+    ``_table_reader``."""
+    paths = [os.path.join(table.root, e.path) for e in entries]
+    return _table_reader(spark, table, meta, paths).parquet(*paths)
 
 
 def reconcile_schema(table: Table, df: DataFrame,
@@ -78,13 +95,12 @@ def reconcile_schema(table: Table, df: DataFrame,
 
     1. rename/drop registry (``Table.schema_cols``): every historical
        physical name maps to its column id's CURRENT name — a single old
-       name is renamed in place, mixed pre/post-rename files (mergeSchema
-       yields both names, each null where absent) coalesce newest-first,
-       and dropped ids disappear from the output;
+       name is renamed in place, several names (the explicit read schema
+       carries every historical name, each null where a file lacks it)
+       coalesce newest-first, and dropped ids disappear from the output;
     2. additive evolution (``Table.schema_adds``): every registered added
-       column exists on the way out — typed nulls when NO live file
-       carries it yet (mergeSchema can only merge columns that exist
-       somewhere). An add that was later renamed fills under its current
+       column exists on the way out — typed nulls when the frame lacks
+       it. An add that was later renamed fills under its current
        name; an add that was later dropped is not filled."""
     if meta is None:
         meta = table.load_metadata()   # one metadata read serves both passes
@@ -182,25 +198,21 @@ def delete_rows_with_seq(spark: SparkSession, table: Table,
     """The merge keys + effective sequence of every equality-delete row:
     the materialized ``__delete_seq`` column when the file was written by
     ``compact_deletes``, else the file's own sequence number (broadcast
-    basename→seq map joined on ``input_file_name()`` — no per-file plan)."""
+    basename→seq map joined on ``input_file_name()`` — no per-file plan).
+    One fixed read schema serves every backlog: a raw merge-written file
+    lacks ``__delete_seq``, which null-fills and falls back to the
+    file-level sequence."""
     dseq_rows = [(os.path.basename(e.path), e.sequence_number)
                  for e in delete_entries]
     dseq_map = F.broadcast(spark.createDataFrame(
         dseq_rows, "__mor_b string, __mor_fseq long"))
-    reader = spark.read
-    if any(_DELETE_SEQ_COL in (e.stats or {}) for e in delete_entries):
-        # mixed backlog (a folded file + raw post-fold merges): the raw
-        # files lack the column — schema-merge nulls it, coalesce below
-        # falls back to the file-level sequence. Delete files are tiny, so
-        # the footer-merge cost is noise.
-        reader = reader.option("mergeSchema", "true")
-    raw = (reader.parquet(*[os.path.join(table.root, e.path)
-                            for e in delete_entries])
+    raw = (spark.read.schema(f"{KEY_SCHEMA}, {_DELETE_SEQ_COL} long")
+           .parquet(*[os.path.join(table.root, e.path)
+                      for e in delete_entries])
            .withColumn("__mor_b", F.element_at(
                F.split(F.input_file_name(), "/"), -1))
            .join(dseq_map, "__mor_b"))
-    seq = (F.coalesce(F.col(_DELETE_SEQ_COL), F.col("__mor_fseq"))
-           if _DELETE_SEQ_COL in raw.columns else F.col("__mor_fseq"))
+    seq = F.coalesce(F.col(_DELETE_SEQ_COL), F.col("__mor_fseq"))
     return raw.select(*MERGE_KEYS, seq.alias(_DELETE_SEQ_COL))
 
 
@@ -222,16 +234,13 @@ def read_with_deletes(spark: SparkSession, table: Table,
         meta = table.load_metadata()
     if not delete_entries:
         return reconcile_added_columns(
-            table, _table_reader(spark, table, meta).parquet(
-                *[os.path.join(table.root, e.path)
-                  for e in data_entries]), meta)
+            table, _read_entries(spark, table, meta, data_entries), meta)
     min_del = min(delete_min_seq(d) for d in delete_entries)
     old = [e for e in data_entries if e.sequence_number < min_del]
     new = [e for e in data_entries if e.sequence_number >= min_del]
     parts = []
     if old:
-        df_old = _table_reader(spark, table, meta).parquet(
-            *[os.path.join(table.root, e.path) for e in old])
+        df_old = _read_entries(spark, table, meta, old)
         dels = (delete_rows_with_seq(spark, table, delete_entries)
                 .select(*MERGE_KEYS))
         if sum(d.file_size_bytes for d in delete_entries) \
@@ -239,8 +248,7 @@ def read_with_deletes(spark: SparkSession, table: Table,
             dels = F.broadcast(dels)
         parts.append(df_old.join(dels, list(MERGE_KEYS), "left_anti"))
     if new:
-        df_new = _table_reader(spark, table, meta).parquet(
-            *[os.path.join(table.root, e.path) for e in new])
+        df_new = _read_entries(spark, table, meta, new)
         parts.append(apply_equality_deletes(spark, table, df_new, new,
                                             delete_entries))
     out = parts[0]
@@ -425,55 +433,43 @@ def scan(spark: SparkSession, table: Table,
     if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
         raise ValueError("pass at most one of snapshot_id / as_of_ms / ref")
     ref_is_tag = False
-    live_meta = None
+    # ONE metadata parse resolves the snapshot (ref record, time travel or
+    # head) AND, unless pinned, the schema registry
+    live_meta = table.load_metadata()
     if ref is not None:
-        # ONE metadata parse resolves the ref record, the snapshot AND
-        # (below) the schema registry — the refs()/snapshot()/
-        # load_metadata() helpers would each re-parse it
-        live_meta = table.load_metadata()
         r = live_meta.get("refs", {}).get(ref)
         if r is None:
             raise KeyError(f"ref {ref!r} not found")
         if r["snapshot_id"] is None:
             raise KeyError(f"ref {ref!r} has no commits yet (branch "
                            "rooted at the null snapshot)")
-        sj = next((x for x in live_meta["snapshots"]
-                   if x["snapshot_id"] == r["snapshot_id"]), None)
-        if sj is None:
-            raise KeyError(f"snapshot {r['snapshot_id']} not found "
-                           "(expired?)")
-        snap = Snapshot.from_json(sj)
+        snap = table.snapshot(r["snapshot_id"], meta=live_meta)
         ref_is_tag = r.get("type") == "tag"
     elif as_of_ms is not None:
-        snap = table.snapshot_as_of(as_of_ms)
+        snap = table.snapshot_as_of(as_of_ms, meta=live_meta)
     elif snapshot_id is None:
-        snap = table.current_snapshot()
+        snap = table.current_snapshot(meta=live_meta)
     else:
-        snap = table.snapshot(snapshot_id)
+        snap = table.snapshot(snapshot_id, meta=live_meta)
+    if snap is None:
+        raise ValueError("scan of empty table; append data first")
+    pin = (schema == "pinned" and snap.schema_state is not None
+           and (snapshot_id is not None or as_of_ms is not None
+                or ref_is_tag))
+    meta = snap.schema_state if pin else live_meta
     # two-level pruning: whole manifests are skipped via the snapshot's
     # manifest-list summaries (never opened), then file-level stats prune
     # within the manifests that remain
     entries = table.manifest_entries(snap, predicates=predicates)
     entries = prune_files(entries, predicates)
-    pin = (schema == "pinned" and snap is not None
-           and snap.schema_state is not None
-           and (snapshot_id is not None or as_of_ms is not None
-                or ref_is_tag))
-    if pin:
-        meta = snap.schema_state  # the registry as of that snapshot
-    elif live_meta is not None:
-        meta = live_meta
-    else:
-        meta = table.load_metadata()  # ONE parse: reader + reconciliation
     if not entries:
-        # empty relation with the right schema: read zero files is an error,
-        # so read one file's schema then filter everything out is wasteful;
-        # instead build an empty DF from the table schema via any parquet file
+        # empty relation with the read schema (the first file's, for a
+        # table without a registry), built locally: no file is read
         all_entries = table.manifest_entries(snap)
         if not all_entries:
             raise ValueError("scan of empty table; append data first")
-        df = spark.read.parquet(os.path.join(table.root, all_entries[0].path))
-        df = df.limit(0)
+        df = spark.createDataFrame([], _read_schema(
+            meta, [os.path.join(table.root, all_entries[0].path)]))
     else:
         # merge-on-read: apply equality-delete files (pruned by the same
         # predicates — a delete outside the predicate key range cannot
@@ -487,8 +483,7 @@ def scan(spark: SparkSession, table: Table,
         if dels:
             df = read_with_deletes(spark, table, entries, dels, meta)
         else:
-            paths = [os.path.join(table.root, e.path) for e in entries]
-            df = _table_reader(spark, table, meta).parquet(*paths)
+            df = _read_entries(spark, table, meta, entries)
     df = reconcile_added_columns(table, df, meta)
     if columns:
         df = df.select(*columns)
@@ -505,19 +500,17 @@ def incremental_scan(spark: SparkSession, table: Table,
     files, and for merge-on-read commits the new insert files (in both
     cases a superset of the changed rows — use ``changes_between`` for
     exact row-level CDC)."""
-    import os
-    base = {e.path for e in
-            table.manifest_entries(table.snapshot(from_snapshot_id))}
-    target = (table.current_snapshot() if to_snapshot_id is None
-              else table.snapshot(to_snapshot_id))
-    new_paths = [os.path.join(table.root, e.path)
-                 for e in table.manifest_entries(target)
-                 if e.path not in base]
-    if not new_paths:
+    meta = table.load_metadata()
+    base = {e.path for e in table.manifest_entries(
+        table.snapshot(from_snapshot_id, meta=meta))}
+    target = (table.current_snapshot(meta=meta) if to_snapshot_id is None
+              else table.snapshot(to_snapshot_id, meta=meta))
+    new = [e for e in table.manifest_entries(target) if e.path not in base]
+    if not new:
         return scan(spark, table, snapshot_id=target.snapshot_id,
                     schema="current").limit(0)
     return reconcile_added_columns(
-        table, _table_reader(spark, table).parquet(*new_paths))
+        table, _read_entries(spark, table, meta, new), meta)
 
 
 def changes_between(spark: SparkSession, table: Table,

@@ -317,8 +317,8 @@ def enforce_constraints(spark, table: Table, staged: list[DataFile],
     data = [e for e in staged if e.content == "data" and e.record_count]
     if not cons or not data:
         return
-    df = spark.read.parquet(*[os.path.join(table.root, e.path)
-                              for e in data])
+    from .scan import _read_entries
+    df = _read_entries(spark, table, None, data)
     if keys_df is not None:
         # join side left to AQE: a backlog merge's key set can be huge —
         # forcing a broadcast here has the same failure mode the ingest

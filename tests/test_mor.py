@@ -661,7 +661,9 @@ def test_compact_deletes_stacked_last_wins_and_mixed_backlog(
         spark, tmp_table_root):
     """Stacked generations on the SAME keys keep last-wins through the
     fold, and a raw merge AFTER the fold composes with the folded file
-    (mixed schema: mergeSchema + coalesce to file-level seq)."""
+    (mixed backlog: the fixed delete read schema null-fills
+    ``__delete_seq`` in the raw file, which coalesces to its file-level
+    seq)."""
     from engine.maintain import compact_deletes, rewrite_deletes
 
     t, df = _setup(spark, tmp_table_root)

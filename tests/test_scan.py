@@ -371,3 +371,71 @@ def test_manifest_list_shadow_pruning_skips_fresh_manifests(
     assert t2.manifest_opens <= 2 * total - fresh, (
         t2.manifest_opens, total, fresh)
     assert sorted_rows(scan(spark, t)) == want
+
+
+def test_scan_shapes_launch_no_spark_job(spark, tmp_table_root):
+    """Every table read passes an explicit schema to Spark, so building a
+    scan's frame launches no job (no footer-inference job), for plain,
+    point, empty, merge-on-read (both halves of the old/new delete split),
+    time-travel, tag and branch reads — and each frame's schema equals a
+    footer-inferring read's."""
+    from engine.merge import merge_into
+    from engine.scan import delete_min_seq
+
+    from .conftest import inferred_scan_schema, spark_jobs
+
+    t, df = _table(spark, tmp_table_root)
+    s1 = t.current_snapshot()
+    t.create_tag("v1", s1.snapshot_id)
+    t.create_branch("audit")
+    extra = (generate_transcripts(spark, num_convs=3)
+             .withColumn("conv_id", F.concat(F.lit("b-"), F.col("conv_id"))))
+    append(t, extra, num_files=1, branch="audit")
+    src = (scan(spark, t).select("conv_id", "turn_idx")
+           .orderBy("conv_id", "turn_idx").limit(3)
+           .withColumn("upd_text", F.lit("edited")))
+    merge_into(spark, t, src, {"text": "upd_text"}, pass_id="nj1",
+               mode="mor")
+    head = t.current_snapshot()
+    dels = t.manifest_entries(head, content="deletes")
+    min_del = min(delete_min_seq(d) for d in dels)
+    seqs = {e.sequence_number for e in t.manifest_entries(head)}
+    assert min(seqs) < min_del <= max(seqs)  # both halves of the split
+
+    live = t.load_metadata()
+    hit = Predicate("conv_id", "eq", "conv-00000000")
+    miss = Predicate("conv_id", "eq", "zzz")
+    shapes = {
+        "head-mor": (lambda: scan(spark, t), head),
+        "point-mor": (lambda: scan(spark, t, predicates=[hit]), head),
+        "empty": (lambda: scan(spark, t, predicates=[miss]), head),
+        "snapshot_id": (lambda: scan(spark, t, snapshot_id=s1.snapshot_id),
+                        s1),
+        "as_of": (lambda: scan(spark, t, as_of_ms=s1.timestamp_ms), s1),
+        "tag": (lambda: scan(spark, t, ref="v1"), s1),
+        "branch": (lambda: scan(spark, t, ref="audit"),
+                   t.ref_snapshot("audit")),
+    }
+    for name, (read, snap) in shapes.items():
+        out, jobs = spark_jobs(spark, read)
+        assert jobs == 0, (name, jobs)
+        assert out.schema == inferred_scan_schema(spark, t, snap, live), name
+    assert scan(spark, t, ref="audit").count() == df.count() + extra.count()
+    assert scan(spark, t).filter("text = 'edited'").count() == 3
+    assert scan(spark, t, predicates=[miss]).count() == 0
+
+
+def test_point_read_runs_only_the_count_jobs(spark, tmp_table_root):
+    """A conv_id point read costs exactly the jobs of its count: the scan
+    adds none (re-counting the same frame launches the same jobs)."""
+    from .conftest import spark_jobs
+
+    t, df = _table(spark, tmp_table_root)
+    p = Predicate("conv_id", "eq", "conv-00000007")
+    n, total = spark_jobs(
+        spark, lambda: scan(spark, t, predicates=[p])
+        .filter(p.to_column()).count())
+    frame = scan(spark, t, predicates=[p]).filter(p.to_column())
+    again, count_only = spark_jobs(spark, frame.count)
+    assert n == again == df.filter(p.to_column()).count() > 0
+    assert total == count_only > 0

@@ -102,8 +102,8 @@ def main() -> None:
              for j, e in enumerate(entries)]
     mapping = F.broadcast(
         spark.createDataFrame(route, "__cmp_base string, __cmp_rep long"))
-    comp_df = (spark.read.parquet(
-                   *[os.path.join(t.root, e.path) for e in entries])
+    from engine.scan import _read_entries
+    comp_df = (_read_entries(spark, t, None, entries)
                .withColumn("__cmp_base",
                            F.element_at(F.split(F.input_file_name(), "/"),
                                         -1))
